@@ -56,27 +56,18 @@ _INDEX_BEGIN = "<!-- operator-index:begin (generated by docs.py) -->"
 _INDEX_END = "<!-- operator-index:end -->"
 
 
-def render_readme_index(bench_path: str = "bench_medians.json") -> str:
-    """One-page family-grouped operator index with the bench median beside
-    each name, so a user can find an operator without reading the 78 KB
-    catalog. Rendered between markers in README.md by ``__main__`` and
-    drift-guarded by tests/test_plans.py.
+def render_readme_index() -> str:
+    """One-page family-grouped operator index, so a user can find an
+    operator without reading the 78 KB catalog. Rendered between markers
+    in README.md by ``__main__`` and drift-guarded by tests/test_plans.py.
 
-    Medians come from the COMMITTED bench_medians.json snapshot (refreshed
-    by ``__main__`` from bench_details.json when that exists), NOT from
-    bench_details.json directly: the driver harness overwrites
-    bench_details.json after every round, and an index rendered from the
-    live file would make the drift test red the moment a median moved."""
-    import json
-    import os
-
+    Rendered from the registry alone (names and families): timings live
+    in the bench sidecars, so a medians refresh can't make the README
+    stale."""
     from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
         all_queries,
     )
 
-    medians = {}
-    if os.path.exists(bench_path):
-        medians = json.load(open(bench_path)).get("queries_sec_median", {})
     by_family: dict[str, list[str]] = {}
     for name, pair in all_queries().items():
         fam = pair.fn.__module__.rsplit(".", 1)[-1]
@@ -84,9 +75,8 @@ def render_readme_index(bench_path: str = "bench_medians.json") -> str:
     lines = [
         _INDEX_BEGIN,
         "",
-        "Every operator, grouped by family, with its sf0.1 bench median "
-        "(seconds, local[32]; full details in `bench_details.json`, full "
-        "descriptions in `OPERATORS.md`):",
+        "Every operator, grouped by family (bench timings in "
+        "`bench_details_c{N}.json`, full descriptions in `OPERATORS.md`):",
         "",
     ]
     for fam in sorted(
@@ -95,12 +85,10 @@ def render_readme_index(bench_path: str = "bench_medians.json") -> str:
     ):
         title = _FAMILY_TITLES.get(fam, fam)
         names = sorted(by_family[fam])
-        lines.append(f"- **{title}** ({len(names)}): " + ", ".join(
-            f"`{n}`" + (
-                f" {medians[n]:.2f}s" if n in medians else ""
-            )
-            for n in names
-        ))
+        lines.append(
+            f"- **{title}** ({len(names)}): "
+            + ", ".join(f"`{n}`" for n in names)
+        )
     lines += ["", _INDEX_END]
     return "\n".join(lines)
 
@@ -120,8 +108,8 @@ def refresh_median_snapshot(
     details_path: str = "bench_details.json",
     snapshot_path: str = "bench_medians.json",
 ) -> None:
-    """Copy the current per-query medians into the committed snapshot the
-    README index renders from (no-op when no bench has run yet).
+    """Copy the current per-query medians into the committed
+    bench_medians.json snapshot (no-op when no bench has run yet).
 
     Quietness precondition (r11 verdict: the committed values were
     captured during a host instability episode and disagreed with the

@@ -50,10 +50,5 @@ def perm_constants(n_perm: int, seed: int = 0x5EED) -> list[tuple[int, int]]:
     ]
 
 
-def perm_hash(base: Column, a: int, b: int) -> Column:
-    """h(x) = (a*x + b) mod M31 over a base value already reduced mod M31."""
-    return F.pmod(F.lit(a) * base + F.lit(b), F.lit(M31))
-
-
 def perm_hash_sql(expr: str, a: int, b: int) -> str:
     return f"(({a} * {expr} + {b}) % {M31})"

@@ -91,13 +91,6 @@ def _kmeans_oracle() -> str:
     """
 
 
-def _quantize(col) -> F.Column:
-    return F.transform(
-        V.to_double_array(col),
-        lambda v: F.floor(v * _QUANT).cast("long"),
-    )
-
-
 # Spark-SQL text twins (see functions/vector.py): the argmin fold over the
 # broadcast centroid array and the 64 per-dimension aggregates are built in
 # Python loops — ~1.3 s of py4j round trips per kmeans_train construction,
@@ -126,14 +119,6 @@ def _argmin_cid_expr(vec: str = "xd", cents: str = "cents") -> str:
         f"(acc, c) -> CASE WHEN ({d} < acc.d) OR (({d} = acc.d) AND "
         f"(c.cid < acc.cid)) THEN struct({d} AS d, c.cid AS cid) "
         f"ELSE acc END)['cid']"
-    )
-
-
-def _sqdist(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda p, q: (p - q) * (p - q)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
     )
 
 

@@ -22,7 +22,6 @@ from hls_payer_mrf_sparkstreaming_spark.functions.hashing import (
     md5u60,
     md5u60_sql,
     perm_constants,
-    perm_hash,
     perm_hash_sql,
 )
 from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
@@ -532,30 +531,6 @@ def _sig_expr(base_col: str = "_mh_base", n_perm: int = N_PERM) -> str:
         for a, b in _PERMS[:n_perm]
     )
     return f"array({mins})"
-
-
-def _mk_perm(ab: tuple[int, int]):
-    # NB: must be a 1-arg lambda via closure — pyspark interprets a second
-    # lambda parameter (even a defaulted one) as the array index
-    return lambda h: perm_hash(h, *ab)
-
-
-def minhash_signature(shingle_col, n_perm: int = N_PERM) -> F.Column:
-    """MinHash signature over a shingle array, entirely in codegen.
-
-    Each shingle string is md5-hashed ONCE (reduced mod M31); the n_perm
-    permutations are multiply-add universal hashes over that fixed-width
-    base — no per-permutation string pass, no wraparound (all operands stay
-    < 2^62, safe under ANSI mode), and bit-identical in DuckDB so the LSH
-    output is oracle-checked end to end.
-    """
-    base = F.transform(shingle_col, lambda s: F.pmod(md5u60(s), F.lit(M31)))
-    return F.array(
-        *[
-            F.array_min(F.transform(base, _mk_perm(ab)))
-            for ab in _PERMS[:n_perm]
-        ]
-    )
 
 
 def minhash_docs(docs: DataFrame, text_col: str = "text") -> DataFrame:

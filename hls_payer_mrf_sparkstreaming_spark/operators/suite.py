@@ -89,16 +89,6 @@ def scratch_persist(df: DataFrame) -> DataFrame:
     return df
 
 
-def clear_scratch() -> None:
-    """Unpersist every tracked scratch relation (test/REPL hook)."""
-    while _SCRATCH:
-        old = _SCRATCH.pop()
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-
-
 def repersist_if_cleared(df: DataFrame) -> None:
     """Re-persist a session-cache entry whose storage was cleared by the
     host application (spark.catalog.clearCache(), an explicit unpersist).

@@ -1951,11 +1951,6 @@ def build_oon_silver_cached(spark, path: str, **options):
     return t
 
 
-def clear_oon_silver_cache() -> None:
-    while _OON_CACHE:
-        _unpersist_oon(_OON_CACHE.popitem()[1])
-
-
 def _oon_allowed_vs_billed_oracle() -> str:
     return f"""
         WITH items AS (

@@ -41,16 +41,6 @@ def open_input(path: str) -> BinaryIO:
     return open(p, "rb")
 
 
-def file_size(path: str) -> int:
-    p = _strip_file_scheme(path)
-    if "://" in p:
-        import pyarrow.fs as pafs
-
-        fs, rel = pafs.FileSystem.from_uri(p)
-        return fs.get_file_info(rel).size
-    return os.path.getsize(p)
-
-
 def decompress_gz(path: str, target_dir: str | None = None) -> str:
     """One-time driver-side pre-pass: ``.gz`` -> sibling uncompressed file
     (gzip is not splittable/seekable, executors need ranged reads — same

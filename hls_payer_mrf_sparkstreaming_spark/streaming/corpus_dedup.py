@@ -16,7 +16,7 @@ Per micro-batch (all digest-width shuffles — text never shuffles):
 4. write survivors to ``out/docs/batch_id=<ck>_N`` and their fps to
    ``out/fps/batch_id=<ck>_N`` — each with OVERWRITE into the
    micro-batch's own hive-partition directory (keyed by checkpoint
-   digest + batch id, see ``_batch_dir``), so a retried or restarted
+   digest + batch id, see ``batch_dir``), so a retried or restarted
    micro-batch of the SAME query REPLACES its outputs instead of
    appending them twice, while a rerun against a fresh checkpoint writes
    disjoint directories. Exactly-once on plain parquet, no transactional
@@ -34,29 +34,12 @@ corpus.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-
-def _batch_dir(out_dir: str, checkpoint_dir: str, batch_id: int) -> str:
-    """Per-micro-batch output directory, namespaced by checkpoint lineage.
-
-    ``batch_id`` is only unique WITHIN one checkpoint lineage: a rerun of
-    the same input against a fresh checkpoint restarts at 0, and a bare
-    ``batch_id=0`` overwrite would clobber the first run's output. Keying
-    the partition value by a digest of the checkpoint path makes the
-    overwrite idempotent exactly where Structured Streaming's own
-    exactly-once contract applies (retries and restarts of the SAME
-    query/checkpoint) while a different checkpoint writes disjoint
-    directories and can never destroy earlier output.
-    """
-    tok = hashlib.md5(
-        os.path.abspath(checkpoint_dir).encode()
-    ).hexdigest()[:8]
-    return os.path.join(out_dir, f"batch_id={tok}_{batch_id}")
+from hls_payer_mrf_sparkstreaming_spark.streaming import batch_dir
 
 
 def dedup_corpus_batch(
@@ -122,10 +105,10 @@ def stream_dedup_corpus(
         # duplicated, on retry.
         fresh = fresh.persist()
         fresh.drop("fp").write.mode("overwrite").parquet(
-            _batch_dir(docs_dir, checkpoint_dir, batch_id)
+            batch_dir(docs_dir, checkpoint_dir, batch_id)
         )
         fresh.select("fp").write.mode("overwrite").parquet(
-            _batch_dir(fps_dir, checkpoint_dir, batch_id)
+            batch_dir(fps_dir, checkpoint_dir, batch_id)
         )
         fresh.unpersist()
 
@@ -260,10 +243,10 @@ def stream_line_dedup(
         # both its docs and its fp shard, so a failure between the two
         # writes cannot double-append rewritten documents on retry
         _reassemble(b, id_col).write.mode("overwrite").parquet(
-            _batch_dir(docs_dir, checkpoint_dir, batch_id)
+            batch_dir(docs_dir, checkpoint_dir, batch_id)
         )
         b.filter("keep").select("fp").write.mode("overwrite").parquet(
-            _batch_dir(fps_dir, checkpoint_dir, batch_id)
+            batch_dir(fps_dir, checkpoint_dir, batch_id)
         )
         b.unpersist()
 
@@ -360,7 +343,7 @@ def stream_dedup_corpus_bloom(
         # (the bitmap partial below is bit_or-idempotent anyway, but the
         # docs sink needs the same guarantee)
         fresh.drop("base").write.mode("overwrite").parquet(
-            _batch_dir(docs_dir, checkpoint_dir, batch_id)
+            batch_dir(docs_dir, checkpoint_dir, batch_id)
         )
         # bitmap partial for the ACCEPTED docs only (bit_or-idempotent)
         partial = None
@@ -375,7 +358,7 @@ def stream_dedup_corpus_bloom(
             .groupBy("word")
             .agg(F.expr("bit_or(m)").alias("m"))
             .write.mode("overwrite")
-            .parquet(_batch_dir(bloom_dir, checkpoint_dir, batch_id))
+            .parquet(batch_dir(bloom_dir, checkpoint_dir, batch_id))
         )
         fresh.unpersist()
 
@@ -417,7 +400,7 @@ def stream_token_mg_partials(
     """Accumulate per-batch Misra-Gries token summaries into ``out_dir``
     (availableNow; drains then stops). Each batch writes its own
     checkpoint-namespaced ``batch_id=`` directory with overwrite
-    (``_batch_dir``), so a retried micro-batch replaces its summary
+    (``batch_dir``), so a retried micro-batch replaces its summary
     instead of double-counting it and a fresh-checkpoint rerun cannot
     clobber an earlier run's partials."""
     from pyspark.sql.window import Window as W
@@ -461,7 +444,7 @@ def stream_token_mg_partials(
             .filter(F.col("n") > 0)
         )
         summary.write.mode("overwrite").parquet(
-            _batch_dir(out_dir, checkpoint_dir, batch_id)
+            batch_dir(out_dir, checkpoint_dir, batch_id)
         )
         counts.unpersist()
 

@@ -29,9 +29,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from hls_payer_mrf_sparkstreaming_spark.streaming.corpus_dedup import (
-    _batch_dir,
-)
+from hls_payer_mrf_sparkstreaming_spark.streaming import batch_dir
 
 
 def dsir_gate_batch(
@@ -87,7 +85,7 @@ def stream_dsir_gate(
     def write_batch(batch: DataFrame, batch_id: int) -> None:
         admitted = dsir_gate_batch(batch, lr, min_avg_nano)
         admitted.write.mode("overwrite").parquet(
-            _batch_dir(f"{out_dir}/docs", checkpoint_dir, batch_id)
+            batch_dir(f"{out_dir}/docs", checkpoint_dir, batch_id)
         )
 
     query = (

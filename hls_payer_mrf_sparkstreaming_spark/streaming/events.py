@@ -19,8 +19,6 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import os
-
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -31,6 +29,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from hls_payer_mrf_sparkstreaming_spark.streaming import batch_dir
 
 
 def stream_events_from_parquet(spark, events_dir: str) -> DataFrame:
@@ -302,16 +302,12 @@ def stream_quantile_partials(
         # idempotent, so a plain append would permanently skew the merged
         # quantiles), and a fresh-checkpoint rerun writes disjoint
         # directories instead of clobbering the first run's partials
-        from hls_payer_mrf_sparkstreaming_spark.streaming.corpus_dedup import (
-            _batch_dir,
-        )
-
         (
             batch.select("event_type", qm_bin(F.col("value")).alias("b"))
             .groupBy("event_type", "b")
             .agg(F.count("*").cast("long").alias("n"))
             .write.mode("overwrite")
-            .parquet(_batch_dir(out_dir, checkpoint_dir, batch_id))
+            .parquet(batch_dir(out_dir, checkpoint_dir, batch_id))
         )
 
     return (
@@ -364,10 +360,6 @@ def stream_m4_partials(
     schema = spark.read.parquet(input_dir).schema
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        from hls_payer_mrf_sparkstreaming_spark.streaming.corpus_dedup import (
-            _batch_dir,
-        )
-
         (
             m4_project(batch)
             .groupBy("event_type", "bucket")
@@ -381,7 +373,7 @@ def stream_m4_partials(
                 F.max_by("cents", F.col("ord_key")).alias("last_cents"),
             )
             .write.mode("overwrite")
-            .parquet(_batch_dir(out_dir, checkpoint_dir, batch_id))
+            .parquet(batch_dir(out_dir, checkpoint_dir, batch_id))
         )
 
     return (
@@ -428,10 +420,6 @@ def stream_cusum_partials(
     schema = spark.read.parquet(input_dir).schema
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        from hls_payer_mrf_sparkstreaming_spark.streaming.corpus_dedup import (
-            _batch_dir,
-        )
-
         (
             batch.groupBy(
                 F.expr(
@@ -441,7 +429,7 @@ def stream_cusum_partials(
             )
             .agg(F.count("*").cast("long").alias("x"))
             .write.mode("overwrite")
-            .parquet(_batch_dir(out_dir, checkpoint_dir, batch_id))
+            .parquet(batch_dir(out_dir, checkpoint_dir, batch_id))
         )
 
     return (

@@ -252,11 +252,9 @@ def test_operator_catalog_is_current():
 
 
 def test_readme_operator_index_is_current():
-    # the README family-grouped index is generated from the registry plus
-    # the COMMITTED bench_medians.json snapshot (NOT the live
-    # bench_details.json, which the driver harness rewrites every round —
-    # comparing against live medians would turn this red the moment a
-    # median moved); fail if an operator lands without a regen
+    # the README family-grouped index is generated from the registry alone
+    # (names and families, no timings), so a medians refresh can't turn
+    # this red; fail if an operator lands without a regen
     import os
 
     from hls_payer_mrf_sparkstreaming_spark.docs import (
@@ -269,9 +267,7 @@ def test_readme_operator_index_is_current():
     with open(os.path.join(root, "README.md")) as f:
         readme = f.read()
     got = readme.split(_INDEX_BEGIN, 1)[1].split(_INDEX_END, 1)[0]
-    want = render_readme_index(
-        bench_path=os.path.join(root, "bench_medians.json")
-    )
+    want = render_readme_index()
     want = want.split(_INDEX_BEGIN, 1)[1].split(_INDEX_END, 1)[0]
     assert got == want, (
         "README operator index is stale — regenerate with "
@@ -471,7 +467,7 @@ def test_no_unmanaged_persist_in_package():
         "similarity.py": 1,  # _PQ_CACHE entry
         "corpus_dedup.py": 4,  # all paired in-foreachBatch
         "corpus_gate.py": 1,  # paired via termination listener
-        "silver_stream.py": 1,  # paired in-batch
+        "silver_stream.py": 2,  # bronze + codes, both paired in-batch
         "mrf_queries.py": 3,  # keyed silver session cache (in-network
         # pair) + keyed allowed-amounts session cache (r13)
     }, counts

@@ -1,7 +1,9 @@
 """Streaming operators: prove stream results == batch results on the same
 input (the check the reference never does — SURVEY.md Tier C)."""
 
+import json
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -202,7 +204,7 @@ def test_attribution_stream_equals_batch(
 
 def test_continuous_silver_foreachbatch_equals_batch(spark, mrf_file, tmp_path):
     """Continuous ETL: bronze -> silver INSIDE the stream (foreachBatch),
-    multiple micro-batches forced via maxchunksperbatch — the appended
+    multiple micro-batches forced via maxchunksperbatch — the written
     silver tables must equal the direct batch build row-for-row, proving
     batch boundaries can't split/duplicate any silver row and surrogate
     keys survive incremental processing."""
@@ -247,17 +249,81 @@ def test_continuous_silver_foreachbatch_equals_batch(spark, mrf_file, tmp_path):
         assert len(set(batches)) >= 2, batches
     finally:
         q.stop()
+    # one source read per chunk: every micro-batch's numInputRows equals
+    # the chunks its offset range released, so no silver branch re-scans
+    # the Python source
+    read = [
+        (p["numInputRows"], _chunks_released(json.loads(p.json)))
+        for p in q.recentProgress
+    ]
+    assert sum(rows for rows, _ in read) > 0, read
+    assert all(rows == chunks for rows, chunks in read), read
     streamed = read_silver(spark, out)
+    # multisets, so a row written twice fails
     for name in SILVER_TABLES:
-        got = {
+        got = Counter(
             tuple(str(c) for c in r) for r in streamed[name].collect()
-        }
-        want = {
+        )
+        want = Counter(
             tuple(str(c) for c in r)
             for r in getattr(batch, name).collect()
-        }
+        )
         assert got == want, name
         assert got, name
+
+
+def _chunks_released(progress: dict) -> int:
+    """Chunks between a progress event's start and end source offsets
+    (``{"files": {path: n_released}}``; the first start is null)."""
+    src = progress["sources"][0]
+    start = (src["startOffset"] or {}).get("files", {})
+    return sum(
+        n - start.get(f, 0) for f, n in src["endOffset"]["files"].items()
+    )
+
+
+def test_continuous_silver_replayed_batch_writes_once(
+    spark, mrf_file, tmp_path
+):
+    """A micro-batch that ran but never committed (a stop mid-batch) is
+    replayed on restart; its per-batch overwrite directories must leave
+    exactly the batch build's row counts, not the batch appended twice."""
+    import os
+
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import build_silver
+    from hls_payer_mrf_sparkstreaming_spark.streaming.silver_stream import (
+        SILVER_TABLES,
+        read_silver,
+        stream_silver_continuous,
+    )
+
+    out, ck = str(tmp_path / "silver"), str(tmp_path / "ck")
+
+    def drain():
+        q = stream_silver_continuous(
+            spark, mrf_file, out, ck, chunktargetbytes=2048
+        )
+        assert q.awaitTermination(180), "availableNow did not drain"
+        return q
+
+    drain()
+    commits = os.path.join(ck, "commits")
+    last = max(int(n) for n in os.listdir(commits) if n.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, name)):
+            os.remove(os.path.join(commits, name))
+    replayed = [
+        p["batchId"]
+        for p in drain().recentProgress
+        if p["numInputRows"] > 0
+    ]
+    assert replayed == [last], replayed
+    streamed = read_silver(spark, out)
+    batch = build_silver(spark, mrf_file, chunktargetbytes=2048)
+    for name in SILVER_TABLES:
+        want = getattr(batch, name).count()
+        assert want > 0, name
+        assert streamed[name].count() == want, name
 
 
 def test_incremental_corpus_dedup_equals_batch(spark, sf_dir, tmp_path):

@@ -82,10 +82,16 @@ def main() -> None:
             t2 = time.time()
             df._jdf.queryExecution().executedPlan()
             t3 = time.time()
-            j0 = len(tracker.getJobIdsForGroup(None) or [])
+            # max job ID, not len(): the AppStatusStore evicts jobs past
+            # spark.ui.retainedJobs, so len() deltas go negative once a
+            # long run crosses the eviction horizon. Job IDs are global and
+            # monotonic, so the delta counts every job started between the
+            # snapshots, cluster-wide: it assumes no concurrent or grouped
+            # job submission.
+            j0 = max(tracker.getJobIdsForGroup(None) or [-1])
             _noop(df)
             t4 = time.time()
-            j1 = len(tracker.getJobIdsForGroup(None) or [])
+            j1 = max(tracker.getJobIdsForGroup(None) or [-1])
             phases["build"].append(t1 - t0)
             phases["analyze"].append(t2 - t1)
             phases["plan"].append(t3 - t2)

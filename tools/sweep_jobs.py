@@ -80,7 +80,9 @@ def main() -> None:
         # spark.ui.retainedJobs (~1000), so len() deltas go NEGATIVE once
         # a long sweep crosses the eviction horizon (the r14 first-sweep
         # bug: 9 queries reported -87..-98 jobs). Job IDs are monotonic,
-        # so a max-ID delta is eviction-immune.
+        # so a max-ID delta is eviction-immune. It counts every job started
+        # between the snapshots, cluster-wide, so it assumes no concurrent
+        # or grouped job submission.
         j0 = max(tracker.getJobIdsForGroup(None) or [-1])
         _noop(df)
         t2 = time.time()

@@ -207,7 +207,7 @@ def bench_ingest(spark, p: str) -> tuple[float, float, float]:
     cold = float("inf")
     for _ in range(RUNS):
         # partitions() runs in a (reused) Python planner worker, so clearing
-        # this process's _MANIFEST_CACHE can't reach it — bump the file's
+        # this process's manifest cache can't reach it — bump the file's
         # mtime instead, which changes the cache key and forces a rescan
         os.utime(p)
         t0 = time.time()
@@ -246,10 +246,10 @@ def _unpersist_all(spark) -> None:
         # from checkpoint files, and neardup_pairs_lsh (the query that IS
         # the edge build) would time a file read instead of the build
         from hls_payer_mrf_sparkstreaming_spark.operators.dedup import (
-            clear_edge_cache,
+            EDGE_CACHE,
         )
 
-        clear_edge_cache()
+        EDGE_CACHE.clear()
     except Exception:
         pass
 
@@ -282,7 +282,7 @@ def main() -> None:
     spreads: dict[str, float] = {}
 
     # The near-dup edge list is a session-level artifact (dedup.py's
-    # _EDGE_CACHE): a real session builds it ONCE and every graph-family
+    # EDGE_CACHE): a real session builds it ONCE and every graph-family
     # query — INCLUDING neardup_pairs_lsh, whose registered entry reads
     # the shared edge list like any other consumer — shares it.
     # _unpersist_all would force each of them to re-run the whole LSH
@@ -313,9 +313,9 @@ def main() -> None:
     # then measures its marginal warm cost — running the query itself
     # untimed warms every fixture it touches (payer_compare reads two).
     from hls_payer_mrf_sparkstreaming_spark.plans.mrf_queries import (
+        SILVER_CACHE,
         SILVER_CONSUMER_QUERIES,
         build_silver_cached,
-        clear_silver_cache,
         fixture_path,
     )
 
@@ -341,7 +341,7 @@ def main() -> None:
     silver_build_samples = []
     for _ in range(RUNS):
         _unpersist_all(spark)
-        clear_silver_cache()
+        SILVER_CACHE.clear()
         t0 = time.time()
         _build_silver_materialized()
         silver_build_samples.append(time.time() - t0)

@@ -15,6 +15,7 @@ twins, on top of the structural property tests in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame, functions as F
 
 from hls_payer_mrf_sparkstreaming_spark.functions.hashing import (
@@ -28,9 +29,9 @@ from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
     load,
     query,
     rebalance,
-    repersist_if_cleared,
     scratch_persist,
 )
+from hls_payer_mrf_sparkstreaming_spark.session import SessionCache
 
 _TOKENS = lambda c: F.split(c, " ")  # noqa: E731
 
@@ -268,9 +269,8 @@ def _compute_jaccard_pairs(spark, sf_dir) -> DataFrame:
 # tree), and persisted. The build intermediates (narrow signature
 # relation, candidate pairs, candidate-pruned shingle arrays) are
 # persisted only within the build and unpersisted the moment the eager
-# checkpoint materializes — nothing leaks into the session. Eviction and
-# clear_edge_cache() unpersist every tuple member; a cleared persist
-# re-materializes from the checkpoint files, not from the pipeline.
+# checkpoint materializes — nothing leaks into the session. A cleared
+# persist re-materializes from the checkpoint files, not from the pipeline.
 #
 # Edges are LSH-BLOCKED (not the exact (lang, length-bucket) self-join):
 # MinHash band candidates verified by exact shingle-set Jaccard >= 0.5.
@@ -295,17 +295,21 @@ EDGE_CONSUMER_QUERIES = frozenset(
     }
 )
 
-_EDGE_CACHE: dict[tuple[str, str], tuple[DataFrame, ...]] = {}
-_EDGE_CACHE_MAX = 8  # FIFO bound, mirroring datasource._MANIFEST_CACHE
-# checkpoint location per cache entry. NOT deleted at eviction time — a
-# previously handed-out consumer DataFrame is lineage-truncated to the
-# checkpoint scan, so deleting under it would turn a stale-but-valid
-# reference into FileNotFoundException. Evicted paths move to the retired
-# list instead and are deleted when provably unreachable: when their
-# owning session is pruned as dead (its DataFrames died with it), or on
-# an explicit clear_edge_cache().
-_EDGE_CKPT: dict[tuple[str, str], str | None] = {}
-_EDGE_CKPT_RETIRED: list[tuple[str, str | None]] = []  # (app_id, path)
+
+def _drop_edge_checkpoint(entry) -> None:
+    # the entry's session may be stopped: delete through the live context
+    _delete_checkpoint(SparkContext._active_spark_context, entry[1])
+
+
+# Entries are (edges, checkpoint path). Eviction does NOT delete the
+# files: a previously handed-out consumer DataFrame is lineage-truncated
+# to the checkpoint scan, so deleting under it would turn a stale-but-
+# valid reference into FileNotFoundException. They are deleted when
+# provably unreachable: when the owning session is gone (its DataFrames
+# died with it), or on EDGE_CACHE.clear().
+EDGE_CACHE = SessionCache(
+    8, frames=lambda e: e[:1], on_drop=_drop_edge_checkpoint
+)
 
 
 def _compute_edges_lsh(spark, sf_dir) -> tuple[DataFrame, list[DataFrame]]:
@@ -383,91 +387,31 @@ def _compute_edges_lsh(spark, sf_dir) -> tuple[DataFrame, list[DataFrame]]:
 
 
 def neardup_edges(spark, sf_dir) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    # entries from dead sessions are unreachable (their persisted blocks
-    # AND every handed-out DataFrame died with the JVM session) — drop
-    # the references and delete their checkpoint files, including paths
-    # retired by earlier evictions of those sessions
-    for k in [k for k in _EDGE_CACHE if k[0] != app_id]:
-        _EDGE_CACHE.pop(k)
-        _delete_checkpoint(spark, _EDGE_CKPT.pop(k, None))
-    for k in [k for k in _EDGE_CKPT if k[0] != app_id]:
-        _delete_checkpoint(spark, _EDGE_CKPT.pop(k))
-    retired_live = []
-    for owner, path in _EDGE_CKPT_RETIRED:
-        if owner != app_id:
-            _delete_checkpoint(spark, path)
-        else:
-            retired_live.append((owner, path))
-    _EDGE_CKPT_RETIRED[:] = retired_live
-    key = (app_id, sf_dir)
-    entry = _EDGE_CACHE.get(key)
-    if entry is None:
-        while len(_EDGE_CACHE) >= _EDGE_CACHE_MAX:
-            old = next(iter(_EDGE_CACHE))
-            for df in _EDGE_CACHE.pop(old):
-                df.unpersist()
-            # retire, don't delete: a consumer may still hold a DataFrame
-            # whose plan is a flat scan of these files (see _EDGE_CKPT)
-            _EDGE_CKPT_RETIRED.append((old[0], _EDGE_CKPT.pop(old, None)))
-        edges, aux = _compute_edges_lsh(spark, sf_dir)
-        # Sever the LSH pipeline from consumers' plans: an eager
-        # checkpoint stores the (density-bounded, tiny) edge list and
-        # replaces the giant shingle/32-perm expression tree with a flat
-        # scan. Without this, every graph-family action re-walks that
-        # tree through cache lookups and AQE per-stage re-planning —
-        # measured ~2-3 s of pure DRIVER time per query at sf0.1, on a
-        # 256-row edge list. Checkpoint files are fault-tolerant storage
-        # (point the checkpoint dir at HDFS/S3 on a real cluster), so a
-        # lost executor re-reads instead of failing. The build
-        # intermediates are dropped immediately — nothing references
-        # them once the edges are materialized.
-        _ensure_checkpoint_dir(spark)
-        # NB: no coalesce before the checkpoint — coalesce propagates
-        # upstream and would run the exact-verify join itself at the
-        # coalesced parallelism (measured +0.6 s at sf0.1)
-        edges = edges.checkpoint(eager=True)
-        for df in aux:
-            df.unpersist()
-        entry = (edges.persist(),)
-        _EDGE_CACHE[key] = entry
-        _EDGE_CKPT[key] = _checkpoint_path(edges)
-    else:
-        for df in entry:
-            _repersist_if_cleared(df)
+    entry = EDGE_CACHE.get(spark, sf_dir, lambda: _build_edges(spark, sf_dir))
     return entry[0]
 
 
-# canonical implementation moved next to the scratch FIFO (suite.py) so
-# other modules' cache consumers import a public utility (advice r12);
-# the private name stays as the module-internal spelling
-_repersist_if_cleared = repersist_if_cleared
-
-
-def clear_edge_cache() -> None:
-    """Unpersist and drop every cached near-dup edge list AND its
-    persisted signature input, deleting all checkpoint files including
-    eviction-retired ones (test/REPL hook — the caller asserts no
-    consumer still holds an edges DataFrame)."""
-    spark = None
-    while _EDGE_CACHE:
-        key, dfs = _EDGE_CACHE.popitem()
-        for df in dfs:
-            df.unpersist()
-        if dfs:
-            spark = dfs[0].sparkSession
-        _delete_checkpoint(spark, _EDGE_CKPT.pop(key, None))
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        spark = SparkSession.getActiveSession()
-    if spark is not None:
-        for key in list(_EDGE_CKPT):
-            _delete_checkpoint(spark, _EDGE_CKPT.pop(key))
-        for _, path in _EDGE_CKPT_RETIRED:
-            _delete_checkpoint(spark, path)
-    _EDGE_CKPT.clear()
-    _EDGE_CKPT_RETIRED.clear()
+def _build_edges(spark, sf_dir) -> tuple[DataFrame, str | None]:
+    edges, aux = _compute_edges_lsh(spark, sf_dir)
+    # Sever the LSH pipeline from consumers' plans: an eager
+    # checkpoint stores the (density-bounded, tiny) edge list and
+    # replaces the giant shingle/32-perm expression tree with a flat
+    # scan. Without this, every graph-family action re-walks that
+    # tree through cache lookups and AQE per-stage re-planning —
+    # measured ~2-3 s of pure DRIVER time per query at sf0.1, on a
+    # 256-row edge list. Checkpoint files are fault-tolerant storage
+    # (point the checkpoint dir at HDFS/S3 on a real cluster), so a
+    # lost executor re-reads instead of failing. The build
+    # intermediates are dropped immediately — nothing references
+    # them once the edges are materialized.
+    _ensure_checkpoint_dir(spark)
+    # NB: no coalesce before the checkpoint — coalesce propagates
+    # upstream and would run the exact-verify join itself at the
+    # coalesced parallelism (measured +0.6 s at sf0.1)
+    edges = edges.checkpoint(eager=True)
+    for df in aux:
+        df.unpersist()
+    return edges, _checkpoint_path(edges)
 
 
 # ---------------------------------------------------------------------------
@@ -1207,7 +1151,7 @@ def _ensure_checkpoint_dir(spark) -> None:
     created without it cannot be repaired here. Instead the iterative
     operators delete superseded round checkpoints explicitly
     (``_delete_checkpoint``) and the edge cache deletes an entry's files
-    on eviction — what remains until JVM exit is only the LIVE results'
+    once its session is gone — what remains until JVM exit is only the LIVE results'
     files. Warn once so the host knows the fallback dir can accumulate."""
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
@@ -1250,7 +1194,8 @@ def _checkpoint_path(df: DataFrame) -> str | None:
 
 def _delete_checkpoint(spark, path: str | None) -> None:
     """Best-effort recursive delete of a checkpoint location through the
-    Hadoop FileSystem API (works for file:, hdfs:, s3a: alike)."""
+    Hadoop FileSystem API (works for file:, hdfs:, s3a: alike). ``spark``
+    is a SparkSession or SparkContext: only its JVM handles are used."""
     if not path:
         return
     try:
@@ -1365,34 +1310,17 @@ def connected_components(
 # Component labels feed two registered queries (dedup_cluster,
 # dedup_cluster_survivors); the CC iteration is the second most expensive
 # stage of the suite after edge generation, and its result is tiny
-# (doc_id, cluster_id longs), so it shares the same bounded per-session
-# cache discipline as _EDGE_CACHE.
-_CC_CACHE: dict[tuple[str, str], DataFrame] = {}
-_CC_CACHE_MAX = 8
+# (doc_id, cluster_id longs), so it is session-cached like the edges.
+_CC_CACHE = SessionCache(8, frames=lambda df: (df,))
 
 
 def _components_cached(spark, sf_dir) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _CC_CACHE if k[0] != app_id]:
-        _CC_CACHE.pop(k)
-    key = (app_id, sf_dir)
-    df = _CC_CACHE.get(key)
-    if df is None:
-        while len(_CC_CACHE) >= _CC_CACHE_MAX:
-            _CC_CACHE.pop(next(iter(_CC_CACHE))).unpersist()
+    def build():
         docs = rebalance(load(spark, sf_dir, "documents"))
         edges = neardup_edges(spark, sf_dir).select("doc_a", "doc_b")
-        df = connected_components(docs, edges).persist()
-        _CC_CACHE[key] = df
-    else:
-        _repersist_if_cleared(df)
-    return df
+        return connected_components(docs, edges)
 
-
-def clear_cc_cache() -> None:
-    """Unpersist and drop every cached component labeling (test hook)."""
-    while _CC_CACHE:
-        _CC_CACHE.popitem()[1].unpersist()
+    return _CC_CACHE.get(spark, sf_dir, build)
 
 
 @query(

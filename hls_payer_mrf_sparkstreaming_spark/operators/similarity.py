@@ -24,9 +24,9 @@ from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
     load,
     query,
     rebalance,
-    repersist_if_cleared,
     scratch_persist,
 )
+from hls_payer_mrf_sparkstreaming_spark.session import SessionCache
 
 _DIM = 64
 
@@ -737,8 +737,7 @@ _PQ_X = (
 )
 
 
-_PQ_CACHE: dict[tuple[str, str], "DataFrame"] = {}
-_PQ_CACHE_MAX = 8  # FIFO bound, mirroring dedup._EDGE_CACHE
+_PQ_CACHE = SessionCache(8, frames=lambda df: (df,))
 
 
 def _pq_fixed(spark, sf_dir):
@@ -749,28 +748,15 @@ def _pq_fixed(spark, sf_dir):
     query set, exact baseline) — unpersisted, every reference rescans
     the parquet and re-runs the quantize transform (5 raw scans in
     pq_recall_eval's plan)."""
-
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _PQ_CACHE if k[0] != app_id]:
-        _PQ_CACHE.pop(k)
-    key = (app_id, sf_dir)
-    df = _PQ_CACHE.get(key)
-    if df is None:
-        while len(_PQ_CACHE) >= _PQ_CACHE_MAX:
-            _PQ_CACHE.pop(next(iter(_PQ_CACHE))).unpersist()
-        df = (
-            rebalance(load(spark, sf_dir, "embeddings"))
-            .selectExpr(
-                "vec_id",
-                f"transform({V.to_double_expr('embedding')}, "
-                f"v -> CAST(floor(v * {_PQ_QUANT}) AS BIGINT)) AS x",
-            )
-            .persist()
-        )
-        _PQ_CACHE[key] = df
-    else:
-        repersist_if_cleared(df)
-    return df
+    return _PQ_CACHE.get(
+        spark,
+        sf_dir,
+        lambda: rebalance(load(spark, sf_dir, "embeddings")).selectExpr(
+            "vec_id",
+            f"transform({V.to_double_expr('embedding')}, "
+            f"v -> CAST(floor(v * {_PQ_QUANT}) AS BIGINT)) AS x",
+        ),
+    )
 
 
 def _pq_codebook(emb):

@@ -23,6 +23,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hls_payer_mrf_sparkstreaming_spark.session import SessionCache
+
 TABLES = [
     "region",
     "nation",
@@ -70,9 +72,9 @@ def query(name: str, oracle: Optional[str] = None, description: str = ""):
 # session-wide FIFO holds the last _SCRATCH_MAX scratch relations and
 # unpersists the oldest on overflow. Eviction is always correctness-safe —
 # persist() keeps lineage, so a consumer that still holds an evicted frame
-# just recomputes. Deliberate session caches (_EDGE_CACHE, _PQ_CACHE,
-# _MANIFEST_CACHE) do NOT route through this: they are keyed, repersisted
-# on clear, and own their eviction policy.
+# just recomputes. This is not a SessionCache (session.py): scratch
+# relations are unkeyed and never looked up again, so there is no hit to
+# serve, only a leak to bound.
 _SCRATCH: list[DataFrame] = []
 _SCRATCH_MAX = 32
 
@@ -87,20 +89,6 @@ def scratch_persist(df: DataFrame) -> DataFrame:
         except Exception:
             pass  # owning session already stopped — nothing to release
     return df
-
-
-def repersist_if_cleared(df: DataFrame) -> None:
-    """Re-persist a session-cache entry whose storage was cleared by the
-    host application (spark.catalog.clearCache(), an explicit unpersist).
-    Without this, every consumer REFERENCE — graph_triangles holds five,
-    pagerank two per round — re-executes the whole upstream pipeline,
-    which the sf1 scale run measured as a 25-46x blowup at 10x data.
-    Shared by every keyed session cache (edge/CC/PQ/silver); lives here,
-    next to the scratch FIFO, so cache consumers in other modules depend
-    on a public utility rather than another operator module's internals
-    (advice r12)."""
-    if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
-        df.persist()
 
 
 def _usec_copy(path: str) -> str:
@@ -174,9 +162,8 @@ def _usec_copy(path: str) -> str:
 # this is "build the reader once", not result caching. Keyed by
 # (session, path, mtime): a rewritten fixture (the degenerate sweep
 # re-materializes its corpus) gets a fresh file index instead of a stale
-# listing. FIFO-bounded like the scratch registry.
-_LOAD_CACHE: dict[tuple, DataFrame] = {}
-_LOAD_CACHE_MAX = 64
+# listing.
+_LOAD_CACHE = SessionCache(64)
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -185,14 +172,9 @@ def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
-    df = _LOAD_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(_usec_copy(path))
-        while len(_LOAD_CACHE) >= _LOAD_CACHE_MAX:
-            _LOAD_CACHE.pop(next(iter(_LOAD_CACHE)))
-        _LOAD_CACHE[key] = df
-    return df
+    return _LOAD_CACHE.get(
+        spark, (path, mtime), lambda: spark.read.parquet(_usec_copy(path))
+    )
 
 
 def rebalance(df: DataFrame) -> DataFrame:

@@ -17,10 +17,7 @@ from pyspark.sql import functions as F
 from hls_payer_mrf_sparkstreaming_spark.operators.relational import (
     ranked_value_histogram,
 )
-from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
-    query,
-    repersist_if_cleared,
-)
+from hls_payer_mrf_sparkstreaming_spark.operators.suite import query
 from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
     build_oon_silver,
     build_silver,
@@ -28,6 +25,7 @@ from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
     HEADER_KEY_REPORTING_STRUCTURE,
     resolve_remote_provider_groups,
 )
+from hls_payer_mrf_sparkstreaming_spark.session import SessionCache
 from hls_payer_mrf_sparkstreaming_spark.sources.datasource import read_payer_mrf
 from hls_payer_mrf_sparkstreaming_spark.sources.synth import (
     materialize_remote_provider_files,
@@ -39,71 +37,32 @@ from hls_payer_mrf_sparkstreaming_spark.sources.synth import (
 _N_ITEMS = 200
 _SEED = 42
 
-# Per-session cache of parsed silver tables, mirroring the bounded
-# neardup-edge/component caches in operators/dedup.py: five registry
-# queries (silver prices/providers, gold shoppable, rate percentiles,
-# rate spread) all derive from the SAME parsed fixture — persisting the
-# parsed in_network / providers branches once per session is the
-# registry-query analogue of save_all's materialize-once medallion
-# discipline (at 100 TB you CTAS silver once and query the tables; here
-# the persisted parse plays that role). Entries from dead sessions are
-# dropped; the FIFO bound caps memory.
-_SILVER_CACHE: dict[tuple, "object"] = {}
-# capacity = the distinct fixtures registry queries parse in one session
-# (main, payer-compare A/B, mixed-arrangement, headroom) — at 4, adding
-# the r13 mixed fixture caused eviction thrash: the main fixture's parsed
-# tables lost their materialized stats mid-suite and downstream plan pins
-# saw cold SMJ plans
-_SILVER_CACHE_MAX = 6
-
-
-def _unpersist_tables(t) -> None:
-    # a cached entry may outlive its SparkSession (stopped mid-process);
-    # unpersist then raises through py4j — the blocks died with the JVM,
-    # so dropping the reference is the only cleanup left
-    try:
-        t.in_network.unpersist()
-        t.providers_x_payer.unpersist()
-    except Exception:
-        pass
+# Session cache of parsed silver tables: five registry queries (silver
+# prices/providers, gold shoppable, rate percentiles, rate spread) all
+# derive from the SAME parsed fixture — persisting the parsed in_network /
+# providers branches once per session is the registry-query analogue of
+# save_all's materialize-once medallion discipline (at 100 TB you CTAS
+# silver once and query the tables; here the persisted parse plays that
+# role). Capacity = the distinct fixtures registry queries parse in one
+# session (main, payer-compare A/B, mixed-arrangement, headroom) — at 4,
+# adding the r13 mixed fixture caused eviction thrash: the main fixture's
+# parsed tables lost their materialized stats mid-suite and downstream
+# plan pins saw cold SMJ plans.
+SILVER_CACHE = SessionCache(
+    6, frames=lambda t: (t.in_network, t.providers_x_payer)
+)
 
 
 def build_silver_cached(spark, path: str, **options):
-    app_id = spark.sparkContext.applicationId
-    # entries keyed by another app_id belong to a previous (now replaced)
-    # session in this process — same liveness heuristic as the
-    # operators/dedup.py edge/component caches
-    for k in [k for k in _SILVER_CACHE if k[0] != app_id]:
-        _unpersist_tables(_SILVER_CACHE.pop(k))
-    key = (app_id, path, tuple(sorted(options.items())))
-    t = _SILVER_CACHE.get(key)
-    if t is None:
-        while len(_SILVER_CACHE) >= _SILVER_CACHE_MAX:
-            _unpersist_tables(_SILVER_CACHE.pop(next(iter(_SILVER_CACHE))))
-        t = build_silver(spark, path, **options)
-        t.in_network.persist()
-        t.providers_x_payer.persist()
-        _SILVER_CACHE[key] = t
-    else:
-        # a host spark.catalog.clearCache() (bench.py between samples)
-        # drops the storage but not this dict entry: without re-persist,
-        # every later consumer re-parses the full in_network branch per
-        # action WITHOUT re-caching — the same stale-CacheManager trap
-        # the edge cache hit (operators/suite.py repersist_if_cleared)
-        repersist_if_cleared(t.in_network)
-        repersist_if_cleared(t.providers_x_payer)
-    return t
-
-
-def clear_silver_cache() -> None:
-    """Unpersist and drop every cached silver parse (test/REPL hook,
-    mirroring operators/dedup.py clear_edge_cache/clear_cc_cache)."""
-    while _SILVER_CACHE:
-        _unpersist_tables(_SILVER_CACHE.popitem()[1])
+    return SILVER_CACHE.get(
+        spark,
+        (path, tuple(sorted(options.items()))),
+        lambda: build_silver(spark, path, **options),
+    )
 
 
 # Registry queries that read through the session silver cache: bench.py
-# warms the cache untimed before each of their timed samples (mirror of
+# warms the cache untimed before each of their timed samples (as for
 # dedup.py EDGE_CONSUMER_QUERIES), so their medians measure the warm
 # consumer cost while the one-time parse is measured separately and fully
 # cold as silver_build_sec.
@@ -1909,8 +1868,9 @@ def mrf_bundle_expansion(spark, sf_dir):
 _OON_N_ITEMS = 80
 _OON_SEED = 7
 
-_OON_CACHE: dict[tuple, "object"] = {}
-_OON_CACHE_MAX = 2
+# parsed allowed-amounts silver: the out_of_network branch is persisted
+# once; payments derive from it
+_OON_CACHE = SessionCache(2, frames=lambda t: (t.out_of_network,))
 
 
 def fixture_oon_path() -> str:
@@ -1924,31 +1884,12 @@ def fixture_oon_path() -> str:
     return p
 
 
-def _unpersist_oon(t) -> None:
-    try:
-        t.out_of_network.unpersist()
-    except Exception:
-        pass
-
-
 def build_oon_silver_cached(spark, path: str, **options):
-    """Session cache of parsed allowed-amounts silver, mirroring
-    build_silver_cached (persist the parsed out_of_network branch once;
-    payments derive from it)."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _OON_CACHE if k[0] != app_id]:
-        _unpersist_oon(_OON_CACHE.pop(k))
-    key = (app_id, path, tuple(sorted(options.items())))
-    t = _OON_CACHE.get(key)
-    if t is None:
-        while len(_OON_CACHE) >= _OON_CACHE_MAX:
-            _unpersist_oon(_OON_CACHE.pop(next(iter(_OON_CACHE))))
-        t = build_oon_silver(spark, path, **options)
-        t.out_of_network.persist()
-        _OON_CACHE[key] = t
-    else:
-        repersist_if_cleared(t.out_of_network)
-    return t
+    return _OON_CACHE.get(
+        spark,
+        (path, tuple(sorted(options.items()))),
+        lambda: build_oon_silver(spark, path, **options),
+    )
 
 
 def _oon_allowed_vs_billed_oracle() -> str:

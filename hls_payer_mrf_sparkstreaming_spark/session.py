@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the one cache
+of per-session intermediates every layer shares.
 
 Defaults chosen for correctness-at-scale first (AQE on, skew-join handling
 on) and then local-mode speed. On a real cluster the same config holds;
@@ -46,12 +47,6 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Deterministic timestamp semantics for oracle comparisons.
         .config("spark.sql.session.timeZone", "UTC")
-        # Required by Spark for any Python-datasource pushFilters call; the
-        # payer-mrf source additionally requires the explicit
-        # filterpushdown=true SOURCE OPTION (or the headerkey option) before
-        # it prunes byte ranges — pushdown is opt-in per read, this conf
-        # alone enables nothing (see sources/datasource.py reader()).
-        .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         # iterative operators (connected components) checkpoint each round;
@@ -75,3 +70,84 @@ def get_spark(
 
     register(spark)
     return spark
+
+
+def _repersist_if_cleared(df) -> None:
+    """Re-persist a cached DataFrame whose storage was cleared by the host
+    application (spark.catalog.clearCache(), an explicit unpersist).
+    Without this, every consumer REFERENCE — graph_triangles holds five,
+    pagerank two per round — re-executes the whole upstream pipeline,
+    which the sf1 scale run measured as a 25-46x blowup at 10x data."""
+    if not (df.storageLevel.useMemory or df.storageLevel.useDisk):
+        df.persist()
+
+
+class SessionCache:
+    """Bounded cache of intermediates reused across one session's queries
+    (parsed silver tables, the near-dup edge list, reader plans).
+
+    Entries belong to the ``applicationId`` that built them. A ``get`` from
+    another application means the old SparkContext was stopped, so every
+    entry is dropped first; their blocks died with it, so nothing is
+    unpersisted. At ``maxsize`` entries the oldest is evicted (FIFO).
+
+    ``frames(value)`` names the DataFrames an entry holds. They are
+    persisted on build, unpersisted on eviction, and re-persisted on a hit
+    whose storage the host cleared. Without ``frames`` entries are plans
+    only and nothing is persisted.
+
+    ``on_drop(value)`` runs once a value is unreachable: when its session
+    is gone, or on ``clear()``. A value evicted inside a live session may
+    still be held by a caller, so its ``on_drop`` waits until then.
+    """
+
+    def __init__(self, maxsize: int, frames=None, on_drop=None):
+        self.maxsize = maxsize
+        self._frames = frames or (lambda value: ())
+        self._on_drop = on_drop
+        self._app_id = None
+        self._entries: dict = {}
+        self._evicted: list = []  # values whose on_drop is still pending
+
+    def get(self, spark, key, build):
+        app_id = spark.sparkContext.applicationId
+        if app_id != self._app_id:
+            self._drop_all()
+            self._app_id = app_id
+        if key in self._entries:
+            value = self._entries[key]
+            for df in self._frames(value):
+                _repersist_if_cleared(df)
+            return value
+        while len(self._entries) >= self.maxsize:
+            old = self._entries.pop(next(iter(self._entries)))
+            self._unpersist(old)
+            if self._on_drop is not None:
+                self._evicted.append(old)
+        value = build()
+        for df in self._frames(value):
+            df.persist()
+        self._entries[key] = value
+        return value
+
+    def clear(self) -> None:
+        """Unpersist and drop every entry (test and benchmark hook; the
+        caller asserts no consumer still holds a value)."""
+        for value in self._entries.values():
+            self._unpersist(value)
+        self._drop_all()
+
+    def _unpersist(self, value) -> None:
+        for df in self._frames(value):
+            try:
+                df.unpersist()
+            except Exception:
+                pass  # owning session already stopped — nothing to release
+
+    def _drop_all(self) -> None:
+        dropped = self._evicted + list(self._entries.values())
+        self._entries.clear()
+        self._evicted.clear()
+        if self._on_drop is not None:
+            for value in dropped:
+                self._on_drop(value)

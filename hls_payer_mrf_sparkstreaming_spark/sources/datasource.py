@@ -33,10 +33,6 @@ Options (case-insensitive, reference parity):
                        offset) for retry-stable downstream surrogate keys
   ``filesystem``       accepted no-op (reference parity): scheme:// paths
                        already route through pyarrow.fs automatically
-  ``filterpushdown``   "true" -> enable Catalyst filter pushdown on
-                       header_key (requires
-                       spark.sql.python.filterPushdown.enabled; see
-                       _Options.filter_pushdown for the lineage caveat)
 
 Usage::
 
@@ -46,6 +42,7 @@ Usage::
 
 from __future__ import annotations
 
+import functools
 import os
 from dataclasses import dataclass
 
@@ -53,9 +50,6 @@ from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
-    EqualTo,
-    Filter,
-    In,
     InputPartition,
 )
 from pyspark.sql.types import (
@@ -66,6 +60,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from hls_payer_mrf_sparkstreaming_spark.session import SessionCache
 from hls_payer_mrf_sparkstreaming_spark.sources import chunker as ck
 from hls_payer_mrf_sparkstreaming_spark.sources import io as mrf_io
 
@@ -174,21 +169,10 @@ class _Options:
         return self.get("decompressdir")
 
     @property
-    def filter_pushdown(self) -> bool:
-        """Strictly opt-in, for two reasons: (a) merely DEFINING pushFilters
-        makes Spark error when ``spark.sql.python.filterPushdown.enabled``
-        is false; (b) Spark caches the planned (pruned) scan per ``load()``
-        DataFrame, so a lineage first executed with a header_key filter
-        keeps the pruned partitions for later unfiltered actions. Safe only
-        when one load() is used with one consistent filter. Prefer the
-        ``headerkey`` option, which prunes explicitly and predictably."""
-        return str(self.get("filterpushdown", "false")).lower() == "true"
-
-    @property
     def header_key(self) -> str | None:
         """Explicit partition pruning: only chunks whose header_key equals
         this value are planned/read. The IO-level equivalent of
-        ``WHERE header_key = ...`` without pushdown's plan-caching hazard."""
+        ``WHERE header_key = ...``."""
         return self.get("headerkey")
 
     @property
@@ -254,47 +238,42 @@ class PayerMrfDataSource(DataSource):
         return bronze_schema(opts.payload_as_array, opts.include_offsets)
 
     def reader(self, schema):
-        opts = _Options(self.options)
-        if opts.filter_pushdown:
-            return PayerMrfPushdownBatchReader(opts)
-        return PayerMrfBatchReader(opts)
+        return PayerMrfBatchReader(_Options(self.options))
 
     def streamReader(self, schema):
         return PayerMrfStreamReader(_Options(self.options))
 
 
-# Driver-side manifest cache. Chunk discovery is a deterministic pure
-# function of the file bytes, and MRF files are immutable once published —
-# but Spark constructs a fresh reader (and so re-plans partitions) for every
-# action, and the silver pipeline alone reads the same bronze file once per
-# header_key branch. Re-scanning a multi-GB file three times is pure waste;
-# the reference scans once per stream (JsonMRFSource.scala:138-178). Keyed
-# by (path, size, mtime_ns, chunk_target, buffersize) so any file change or
-# chunking-parameter change invalidates naturally; bounded FIFO since a
-# manifest is a few small tuples per ~chunktargetbytes of input.
-_MANIFEST_CACHE: dict[tuple, list] = {}
-_MANIFEST_CACHE_MAX_FILES = 256
+# Manifest cache, evaluated in the Python planner worker. Chunk discovery
+# is a deterministic pure function of the file bytes, and MRF files are
+# immutable once published — but Spark constructs a fresh reader (and so
+# re-plans partitions) for every action, and the silver pipeline alone
+# reads the same bronze file once per header_key branch. Re-scanning a
+# multi-GB file three times is pure waste; the reference scans once per
+# stream (JsonMRFSource.scala:138-178). Keyed by (path, size, mtime_ns,
+# chunk_target, buffersize) so any file change or chunking-parameter
+# change invalidates naturally; not session-scoped, since the bytes do
+# not depend on the session. A manifest is a few small tuples per
+# ~chunktargetbytes of input.
+@functools.lru_cache(maxsize=256)
+def _scan_manifest(
+    abspath: str, size: int, mtime_ns: int, chunk_target: int, buffersize: int
+) -> tuple:
+    return tuple(ck.scan_chunks(abspath, chunk_target, buffersize))
 
 
 def _scan_chunks_cached(path: str, chunk_target: int, buffersize: int):
     try:
         st = os.stat(path)
-        key = (
-            os.path.abspath(path),
-            st.st_size,
-            st.st_mtime_ns,
-            chunk_target,
-            buffersize,
-        )
     except OSError:
         return ck.scan_chunks(path, chunk_target, buffersize)
-    chunks = _MANIFEST_CACHE.get(key)
-    if chunks is None:
-        chunks = list(ck.scan_chunks(path, chunk_target, buffersize))
-        if len(_MANIFEST_CACHE) >= _MANIFEST_CACHE_MAX_FILES:
-            _MANIFEST_CACHE.pop(next(iter(_MANIFEST_CACHE)))
-        _MANIFEST_CACHE[key] = chunks
-    return chunks
+    return _scan_manifest(
+        os.path.abspath(path),
+        st.st_size,
+        st.st_mtime_ns,
+        chunk_target,
+        buffersize,
+    )
 
 
 def _load_manifest_rows(manifest: str) -> list[dict]:
@@ -350,14 +329,10 @@ class PayerMrfBatchReader(DataSourceReader):
 
     def __init__(self, opts: _Options):
         self._opts = opts
-        # None = no constraint; the headerkey option narrows it up front
-        self._hk_allowed: set[str] | None = (
-            {opts.header_key} if opts.header_key is not None else None
-        )
 
     def partitions(self):
         opts = self._opts
-        allowed = self._hk_allowed
+        hk = opts.header_key  # None = no constraint
         if opts.manifest_file:
             rows = _load_manifest_rows(opts.manifest_file)
             return [
@@ -370,7 +345,7 @@ class PayerMrfBatchReader(DataSourceReader):
                     opts.include_offsets,
                 )
                 for r in rows
-                if allowed is None or r["header_key"] in allowed
+                if hk is None or r["header_key"] == hk
             ]
         paths = mrf_io.resolve_input_paths(opts.path, opts.decompress_dir)
 
@@ -387,7 +362,7 @@ class PayerMrfBatchReader(DataSourceReader):
                 for c in _scan_chunks_cached(
                     path, opts.chunk_target, opts.buffersize
                 )
-                if allowed is None or c.header_key in allowed
+                if hk is None or c.header_key == hk
             ]
 
         if len(paths) == 1:
@@ -399,36 +374,6 @@ class PayerMrfBatchReader(DataSourceReader):
 
     def read(self, partition: _ChunkPartition):
         return _read_partition(partition)
-
-
-class PayerMrfPushdownBatchReader(PayerMrfBatchReader):
-    """Batch reader with ``header_key`` partition pruning.
-
-    Separate subclass because defining ``pushFilters`` at all makes Spark
-    error out when ``spark.sql.python.filterPushdown.enabled`` is false.
-    """
-
-    def pushFilters(self, filters: list[Filter]):
-        """A chunk whose header_key fails an equality/IN predicate cannot
-        produce matching rows, so its byte range is never read — at 100 TB
-        this turns ``WHERE header_key='in_network'`` into an IO-level skip
-        of the provider_references/header ranges. All filters are returned
-        as unsupported so Spark re-applies them row-level; pruning here is
-        purely an IO optimization and cannot change results.
-        """
-        for f in filters:
-            allowed: set[str] | None = None
-            if isinstance(f, EqualTo) and f.attribute == ("header_key",):
-                allowed = {f.value}
-            elif isinstance(f, In) and f.attribute == ("header_key",):
-                allowed = set(f.value)
-            if allowed is not None:
-                self._hk_allowed = (
-                    allowed
-                    if self._hk_allowed is None
-                    else self._hk_allowed & allowed
-                )
-        return filters
 
 
 class _FileScan:
@@ -463,12 +408,6 @@ class PayerMrfStreamReader(DataSourceStreamReader):
     (JsonMRFSource.scala:138-178) but without shared mutable state; when
     every known file is exhausted, the input is re-listed so directory
     streams pick up late-arriving files.
-
-    Legacy ``{"index": n}`` checkpoints (pre-multi-file format) are
-    converted on restart by replaying the deterministic chain order over
-    the current sorted file set — valid as long as the file set did not
-    change while the stream was down, which the single-global-index format
-    required anyway.
     """
 
     def __init__(self, opts: _Options):
@@ -543,36 +482,14 @@ class PayerMrfStreamReader(DataSourceStreamReader):
         }
 
     def _to_file_map(self, offset: dict) -> dict[str, int]:
-        if "files" in offset:
-            return dict(offset["files"])
-        # legacy single-global-index offset: replay the deterministic
-        # chain (sorted paths, chunks in scan order) to split the index
-        remaining = offset.get("index", 0)
-        out: dict[str, int] = {}
-        if remaining == 0:
-            return out
-        if not self._listed:
-            self._list_files()
-        for p, scan in self._scans.items():
-            while (
-                scan.released() - scan.gc
-            ) < remaining and not scan.exhausted:
-                try:
-                    scan.rows.append(next(scan.gen))
-                except StopIteration:
-                    scan.exhausted = True
-            take = min(remaining, scan.released())
-            out[p] = take
-            remaining -= take
-            if remaining == 0:
-                break
-        if remaining:
+        if "files" not in offset:
             raise RuntimeError(
-                f"payer-mrf: legacy offset overruns manifest by "
-                f"{remaining} chunks — the file set changed while the "
-                "stream was down"
+                f"payer-mrf: unsupported offset format {offset!r} — "
+                'expected {"files": {path: n}}; the pre-multi-file global '
+                '"index" format is no longer read — restart the stream '
+                "on a fresh checkpoint location"
             )
-        return out
+        return dict(offset["files"])
 
     # -- DataSourceStreamReader protocol ------------------------------------
 
@@ -739,11 +656,10 @@ def build_manifest_distributed(
 # Keyed by (session, path, options, input-file stat signature) so a
 # rewritten fixture or changed option builds a fresh reader; unstatable
 # (remote) inputs skip the cache entirely.
-_READER_CACHE: dict[tuple, object] = {}
-_READER_CACHE_MAX = 64
+_READER_CACHE = SessionCache(64)
 
 
-def _reader_cache_key(spark, path: str, opt_l: dict):
+def _reader_cache_key(path: str, opt_l: dict):
     try:
         paths = mrf_io.resolve_input_paths(
             path, opt_l.get("decompressdir")
@@ -754,7 +670,6 @@ def _reader_cache_key(spark, path: str, opt_l: dict):
     except Exception:
         return None
     return (
-        spark.sparkContext.applicationId,
         path,
         tuple(sorted((k, str(v)) for k, v in opt_l.items())),
         stat_sig,
@@ -814,18 +729,15 @@ def read_payer_mrf(spark, path: str, **options):
                         spark, paths, mpath, chunk_target, buffersize
                     )
                 opt_l["manifestfile"] = mpath
-    key = _reader_cache_key(spark, path, opt_l)
-    if key is not None and key in _READER_CACHE:
-        return _READER_CACHE[key]
-    reader = spark.read.format(FORMAT_NAME)
-    for k, v in opt_l.items():
-        reader = reader.option(k, v)
-    df = reader.load(path)
-    if key is not None:
-        while len(_READER_CACHE) >= _READER_CACHE_MAX:
-            _READER_CACHE.pop(next(iter(_READER_CACHE)))
-        _READER_CACHE[key] = df
-    return df
+
+    def load():
+        reader = spark.read.format(FORMAT_NAME)
+        for k, v in opt_l.items():
+            reader = reader.option(k, v)
+        return reader.load(path)
+
+    key = _reader_cache_key(path, opt_l)
+    return load() if key is None else _READER_CACHE.get(spark, key, load)
 
 
 def stream_payer_mrf(spark, path: str, **options):

@@ -26,12 +26,7 @@ from hls_payer_mrf_sparkstreaming_spark.sources.chunker import (
 )
 from hls_payer_mrf_sparkstreaming_spark.sources.synth import write_mrf_file
 
-REFERENCE_FIXTURES = [
-    "/root/reference/src/test/resources/in-network-rates-fee-for-service-single-plan-sample.json",
-    "/root/reference/src/test/resources/in-network-rates-capitation-single-plan-sample.json",
-    "/root/reference/src/test/resources/in-network-rates-bundle-single-plan-sample.json",
-    "/root/reference/src/test/resources/in-network-rates-multiple-plans-sample.json",
-]
+CMS_SHAPES = ["ffs", "capitation", "bundle", "multiple_plans"]
 
 
 # ---------------------------------------------------------------------------
@@ -130,15 +125,18 @@ def check_roundtrip(raw: bytes, chunk_target: int, read_size: int):
     return chunks
 
 
-@pytest.mark.parametrize("path", REFERENCE_FIXTURES)
+@pytest.mark.parametrize("shape", CMS_SHAPES)
 @pytest.mark.parametrize("read_size", [64 * 1024, 97, 256])
-def test_reference_fixtures_roundtrip(path, read_size):
-    raw = open(path, "rb").read()
-    check_roundtrip(raw, chunk_target=1024, read_size=read_size)
+def test_cms_fixtures_roundtrip(cms_samples, shape, read_size):
+    raw = open(cms_samples[shape], "rb").read()
+    chunks = check_roundtrip(raw, chunk_target=1024, read_size=read_size)
+    assert len(chunks) > 2  # header, both arrays: the splitter really split
 
 
-def test_gz_fixture_roundtrip(tmp_path):
-    gz = "/root/reference/src/test/resources/in-network-rates-fee-for-service-single-plan-sample1.json.gz"
+def test_gz_fixture_roundtrip(cms_samples, tmp_path):
+    gz = str(tmp_path / "in-network-rates-ffs-sample.json.gz")
+    with open(cms_samples["ffs"], "rb") as src, gzip.open(gz, "wb") as dst:
+        dst.write(src.read())
     raw = gzip.open(gz, "rb").read()
     check_roundtrip(raw, chunk_target=512, read_size=128)
 

@@ -1,7 +1,7 @@
 """End-to-end tests of the payer-mrf data source (batch + streaming).
 
-Equivalents of reference TST01-05
-(/root/reference/src/test/scala/com/databricks/SparkStreamingSource.scala:10-172).
+Equivalents of the reference's TST01-05 source tests
+(SparkStreamingSource.scala:10-172).
 """
 
 import gzip
@@ -92,13 +92,9 @@ def test_gz_input(spark, mrf_file, tmp_path):
     assert os.path.exists(str(tmp_path / "out" / "sample.json"))
 
 
-def test_reference_fixture_batch(spark):
-    """Read the actual CMS sample from the reference test resources."""
-    path = (
-        "/root/reference/src/test/resources/"
-        "in-network-rates-fee-for-service-single-plan-sample.json"
-    )
-    df = read_payer_mrf(spark, path, chunktargetbytes=1024)
+def test_cms_fixture_batch(spark, cms_samples):
+    """Read the fee-for-service CMS sample through the source."""
+    df = read_payer_mrf(spark, cms_samples["ffs"], chunktargetbytes=1024)
     in_net = df.filter(F.col("header_key") == "in_network").collect()
     elems = [e for r in in_net for e in json.loads(r["json_payload"])]
     assert {e["billing_code"] for e in elems} == {"27447", "27448"}
@@ -262,41 +258,6 @@ def test_headerkey_option_prunes_and_matches(spark, mrf_file):
         for r in full.filter(F.col("header_key") == "in_network").collect()
     )
     assert a == b and len(a) >= 1
-
-
-def test_filter_pushdown_reader_prunes_partitions(spark, mrf_file):
-    """Explicit pushdown reader: header_key equality filters prune byte
-    ranges at planning time; all filters are handed back for re-apply."""
-    from pyspark.sql.datasource import EqualTo
-    from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
-        PayerMrfBatchReader,
-        PayerMrfPushdownBatchReader,
-        _Options,
-    )
-
-    opts = _Options({"path": mrf_file, "chunktargetbytes": "4096"})
-    unpruned = len(PayerMrfBatchReader(opts).partitions())
-
-    r = PayerMrfPushdownBatchReader(opts)
-    returned = list(r.pushFilters([EqualTo(("header_key",), "in_network")]))
-    assert len(returned) == 1
-    pruned = r.partitions()
-    assert 0 < len(pruned) < unpruned
-    assert all(p.header_key == "in_network" for p in pruned)
-
-
-def test_filter_pushdown_e2e_single_use_lineage(spark, mrf_file):
-    """filterpushdown=true on a fresh single-purpose DataFrame (the only
-    supported pattern — Spark caches the pruned plan per lineage)."""
-    df = read_payer_mrf(
-        spark,
-        mrf_file,
-        chunktargetbytes=4096,
-        filterpushdown="true",
-    ).filter(F.col("header_key") == "provider_references")
-    rows = df.collect()
-    assert len(rows) >= 1
-    assert all(r["header_key"] == "provider_references" for r in rows)
 
 
 def test_silver_uses_pruned_branches(spark, mrf_file):
@@ -620,43 +581,23 @@ def test_checkpoint_restart_exactly_once_multifile(spark, tmp_path):
     assert have == want
 
 
-def test_legacy_global_index_offset_converts(tmp_path):
-    """Pre-multi-file checkpoints stored one global chunk index; a restart
-    on the new per-file format must map {"index": n} onto the same chunks
-    the old chain order released — no Spark session needed, the reader
-    protocol is plain Python."""
+def test_offset_without_files_is_rejected(mrf_file):
+    """Offsets are read back from checkpoints; one without the per-file
+    ``"files"`` map (the pre-multi-file global ``"index"`` format) must
+    fail loudly and name the format, never be guessed at — no Spark
+    session needed, the reader protocol is plain Python."""
     from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
         PayerMrfStreamReader,
         _Options,
     )
-    from hls_payer_mrf_sparkstreaming_spark.sources.synth import write_mrf_file
 
-    d = tmp_path / "legacy"
-    d.mkdir()
-    write_mrf_file(str(d / "a.json"), n_in_network=20, seed=1)
-    write_mrf_file(str(d / "b.json"), n_in_network=20, seed=2)
-    opts = {"path": str(d), "chunktargetbytes": 2048}
-
-    # reference run on the new format: full release, all partitions
-    ref = PayerMrfStreamReader(_Options(opts))
-    ref._pull(0)
-    full = ref._offset()
-    all_parts = ref.partitions({"files": {}}, full)
-    n = len(all_parts)
-    assert n > 4
-
-    # fresh reader (simulated restart): legacy start offset at k must
-    # yield exactly the chunks after the first k of the old chain order
-    k = 3
-    fresh = PayerMrfStreamReader(_Options(opts))
-    tail = fresh.partitions({"index": k}, full)
-    key = lambda p: (p.path, p.start)  # noqa: E731
-    assert [key(p) for p in tail] == [key(p) for p in all_parts[k:]]
-
-    # legacy offset beyond the manifest must fail loudly, not mis-assign
-    fresh2 = PayerMrfStreamReader(_Options(opts))
-    with pytest.raises(RuntimeError, match="legacy offset overruns"):
-        fresh2.partitions({"index": n + 5}, full)
+    reader = PayerMrfStreamReader(_Options({"path": mrf_file}))
+    full = {"files": {mrf_file: 1}}
+    for start, end in [({"index": 3}, full), ({"files": {}}, {"index": 3})]:
+        with pytest.raises(RuntimeError, match="unsupported offset format"):
+            reader.partitions(start, end)
+    with pytest.raises(RuntimeError, match="unsupported offset format"):
+        reader.commit({"index": 3})
 
 
 def test_max_bytes_per_batch_rate_limits_release(tmp_path):

@@ -57,7 +57,7 @@ def _run(spark, names, sf):
 
     from hls_payer_mrf_sparkstreaming_spark.operators import dedup
 
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     failures = []
     qs = E.queries()
     for name in names:
@@ -65,7 +65,7 @@ def _run(spark, names, sf):
             qs[name](spark, sf).collect()
         except Exception as exc:  # noqa: BLE001 — collecting the report
             failures.append((name, str(exc).split("\n")[0][:140]))
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     assert not failures, failures
 
 

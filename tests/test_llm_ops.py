@@ -1785,31 +1785,28 @@ def test_overlap_snapshot_guards_foreign_datasets(spark, tmp_path):
 def test_edge_cache_eviction_defers_checkpoint_delete(spark, sf_dir):
     """Evicting an edge-cache entry must NOT delete its checkpoint files
     while the owning session lives (a handed-out consumer DataFrame is a
-    flat scan of those files); clear_edge_cache removes everything."""
+    flat scan of those files); EDGE_CACHE.clear() removes everything."""
     import os
 
     from hls_payer_mrf_sparkstreaming_spark.operators import dedup
 
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     edges = dedup.neardup_edges(spark, sf_dir)
     n = edges.count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = dedup._EDGE_CKPT[key]
+    path = dedup._checkpoint_path(edges)
     local = path.replace("file:", "")
     assert os.path.exists(local)
-    # force the FIFO to evict the real entry (same app id, so the
-    # dead-session prune cannot remove the fillers first)
-    app = spark.sparkContext.applicationId
-    for i in range(dedup._EDGE_CACHE_MAX):
-        fk = (app, f"__filler{i}")
-        dedup._EDGE_CACHE[fk] = tuple()
-        dedup._EDGE_CKPT[fk] = None
-    dedup.neardup_edges(spark, "/root/testdata/sf0.01").count()
-    assert key not in dedup._EDGE_CACHE
-    assert any(p == path for _, p in dedup._EDGE_CKPT_RETIRED)
+    assert edges.storageLevel.useMemory
+    # force the FIFO to evict the real entry with cheap same-session
+    # fillers (no checkpoint of their own)
+    for i in range(dedup.EDGE_CACHE.maxsize):
+        dedup.EDGE_CACHE.get(
+            spark, f"__filler{i}", lambda: (spark.range(1), None)
+        )
+    assert not edges.storageLevel.useMemory, "eviction must unpersist"
     assert os.path.exists(local), "eviction deleted files under a consumer"
     assert edges.count() == n  # stale reference still executes
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     assert not os.path.exists(local)
 
 
@@ -1888,7 +1885,7 @@ def test_text_ops_survive_empty_and_short_docs(spark, tmp_path):
     )
     sf = str(tmp_path) + "/"
     docs.coalesce(1).write.mode("overwrite").parquet(sf + "documents.parquet")
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     for name in (
         "dedup_minhash_lsh",
         "neardup_pairs_lsh",
@@ -1899,7 +1896,7 @@ def test_text_ops_survive_empty_and_short_docs(spark, tmp_path):
         "ngram_jaccard_pairs",
     ):
         E.queries()[name](spark, sf).collect()  # must not raise
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
 
 
 def test_stats_ops_survive_degenerate_groups(spark, tmp_path):

@@ -410,10 +410,10 @@ def test_no_driver_collect_in_package():
 
 def test_no_unmanaged_persist_in_package():
     # Every .persist() in the package must be one of: the scratch FIFO
-    # itself (suite.py), a keyed session cache with an eviction policy
-    # (edge/CC/PQ caches, _repersist_if_cleared), or a call PAIRED with
-    # an unpersist in the same lifecycle (foreachBatch bodies, the
-    # corpus-gate termination listener). A bare persist leaks one cached
+    # itself (suite.py), the keyed SessionCache with its eviction policy
+    # (session.py), or a call PAIRED with an unpersist in the same
+    # lifecycle (foreachBatch bodies, the corpus-gate termination
+    # listener). A bare persist leaks one cached
     # relation per call into a long-lived host session (advice r8/r10) —
     # operators that need a scratch cache route through scratch_persist.
     import glob as _glob
@@ -422,15 +422,13 @@ def test_no_unmanaged_persist_in_package():
         # file basename -> set of line-content markers that justify a
         # direct persist there (checked by substring of the source line
         # or the file's audited pairing, listed explicitly)
+        "session.py": "the keyed SessionCache implementation itself",
         "suite.py": "the FIFO implementation itself",
-        "dedup.py": "keyed caches (_EDGE_CACHE/_CC_CACHE) + paired "
-        "build intermediates, audited below",
-        "similarity.py": "_PQ_CACHE keyed cache",
+        "dedup.py": "paired build intermediates, audited below",
         "corpus_dedup.py": "per-micro-batch persists paired with "
         "unpersist in the same foreachBatch body",
         "corpus_gate.py": "paired with unpersist on stream termination",
         "silver_stream.py": "per-micro-batch, paired",
-        "mrf_queries.py": "keyed silver-table session cache",
     }
     pkg = os.path.join(
         os.path.dirname(__file__), "..", "hls_payer_mrf_sparkstreaming_spark"
@@ -460,16 +458,12 @@ def test_no_unmanaged_persist_in_package():
         if n:
             counts[base] = n
     assert counts == {
-        "suite.py": 2,  # scratch_persist's own body +
-        # repersist_if_cleared (moved here from dedup.py, advice r12)
-        "dedup.py": 6,  # 3 paired build intermediates + edge-cache and
-        # CC-cache entries + paired CC sym
-        "similarity.py": 1,  # _PQ_CACHE entry
+        "session.py": 2,  # SessionCache build + re-persist on a hit
+        "suite.py": 1,  # scratch_persist's own body
+        "dedup.py": 4,  # 3 paired build intermediates + paired CC sym
         "corpus_dedup.py": 4,  # all paired in-foreachBatch
         "corpus_gate.py": 1,  # paired via termination listener
         "silver_stream.py": 2,  # bronze + codes, both paired in-batch
-        "mrf_queries.py": 3,  # keyed silver session cache (in-network
-        # pair) + keyed allowed-amounts session cache (r13)
     }, counts
 
 
@@ -810,7 +804,7 @@ def _edge_build_plan(spark) -> str:
     build-shape guards must explain the pipeline itself."""
     from hls_payer_mrf_sparkstreaming_spark.operators import dedup
 
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     edges, aux = dedup._compute_edges_lsh(spark, SF_DIR)
     jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
@@ -869,7 +863,7 @@ def test_consumer_plans_truncated_at_edge_checkpoint(spark):
     # driver time per action in cache lookups and AQE re-planning
     from hls_payer_mrf_sparkstreaming_spark.operators import dedup
 
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     for name in ["graph_triangles", "dedup_graph_stats", "graph_pagerank"]:
         p = plan(spark, name)
         assert "ExistingRDD" in p, (name, p)
@@ -931,7 +925,7 @@ def test_lsh_recall_truth_is_block_equijoin(spark):
     # truth persist are gone) — no cartesian of data relations, no Python
     from hls_payer_mrf_sparkstreaming_spark.operators import dedup
 
-    dedup.clear_edge_cache()
+    dedup.EDGE_CACHE.clear()
     p = plan(spark, "lsh_edge_recall")
     assert "CartesianProduct" not in p, p
     assert "LeftOuter" in p, p

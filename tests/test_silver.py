@@ -1,5 +1,5 @@
 """Silver/gold pipeline tests against the synthetic MRF fixture and the
-reference CMS sample (gold query parity with 01_payer_mrf_demo.py:229-238).
+CMS sample shapes (gold query parity with 01_payer_mrf_demo.py:229-238).
 """
 
 import json
@@ -90,12 +90,8 @@ def test_gold_shoppable_price(tables, mrf_file):
         assert r["negotiated_rate"] > 0
 
 
-def test_gold_on_reference_sample(spark):
-    path = (
-        "/root/reference/src/test/resources/"
-        "in-network-rates-fee-for-service-single-plan-sample.json"
-    )
-    tables = build_silver(spark, path, chunktargetbytes=1024)
+def test_gold_on_cms_sample(spark, cms_samples):
+    tables = build_silver(spark, cms_samples["ffs"], chunktargetbytes=1024)
     # billing code 27448 rate 12003.45 is linked via provider_reference id 1,
     # whose two provider groups carry tins 11-1111111 and 22-2222222
     for tin in ["11-1111111", "22-2222222"]:
@@ -103,7 +99,6 @@ def test_gold_on_reference_sample(spark):
         assert len(rows) == 1
         assert rows[0]["negotiated_rate"] == 12003.45
         assert rows[0]["tin"]["value"] == tin
-    rows = tables.shoppable_price("27448", "11-1111111").collect()
     # 27447 only has inline provider_groups (no provider_references) -> empty
     assert tables.shoppable_price("27447", "11-1111111").count() == 0
 
@@ -181,16 +176,12 @@ def test_repeated_billing_code_keys_unique(spark, tmp_path):
     }
 
 
-def test_capitation_and_bundle_fixtures_parse(spark):
+def test_capitation_and_bundle_fixtures_parse(spark, cms_samples):
     for name, array_field in [
-        ("in-network-rates-capitation-single-plan-sample.json", "covered_services"),
-        ("in-network-rates-bundle-single-plan-sample.json", "bundled_codes"),
+        ("capitation", "covered_services"),
+        ("bundle", "bundled_codes"),
     ]:
-        tables = build_silver(
-            spark,
-            f"/root/reference/src/test/resources/{name}",
-            chunktargetbytes=1024,
-        )
+        tables = build_silver(spark, cms_samples[name], chunktargetbytes=1024)
         items = tables.in_network
         assert items.count() >= 1
         assert items.filter(F.col(array_field).isNotNull()).count() >= 1

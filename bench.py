@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR plus the MRF
-splitter's standalone throughput. Prints ONE JSON line:
+"""Benchmark harness: every registry query at $SPARK_GRAFT_SF_DIR plus the
+MRF splitter's and bronze ingest's throughput. Prints ONE JSON line:
 
   {"metric": "...", "value": <total headline seconds>, "unit": "sec",
    "queries": {...per-query sec...}, "sf": ..., "mrf_gb_per_min": ...}
+
+Also the one measured-run primitive the timing scripts in tools/ and
+bench_scale.py share: reset, warm, sample and measure.
 """
 
 from __future__ import annotations
@@ -20,132 +23,10 @@ os.environ["PYTHONPATH"] = (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # min-of-N timing: this host shows bursty external CPU/IO interference, so a
 # single timed pass can be 10-30x off; the minimum is the least-interfered
 # estimate of the query's true cost
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-
-# Curated ordering: the expensive / representative queries first (their
-# medians are the ones worth eyeballing); the full registry is appended
-# below so bench coverage can never drift from the operator registry again
-# (round-5 verdict: 29 registered ops were silently unbenched).
-_CURATED = [
-    "pricing_summary",
-    "star_join_revenue",
-    "skew_salted_join",
-    "window_topk_per_group",
-    "explode_tokens",
-    "windowed_agg_events",
-    "sessionize",
-    "dedup_exact",
-    "ngram_jaccard_pairs",
-    "ann_cosine_topk",
-    "ann_lsh_bucketed",
-    "ann_ivf_topk",
-    "dedup_minhash_lsh",
-    "text_quality",
-    "text_token_count_bpe",
-    "mrf_bronze",
-    "mrf_gold_shoppable",
-    "asof_join",
-    "range_join",
-    "percentile_summary",
-    "tfidf_top_terms",
-    "quality_filter_pipeline",
-    "knn_join",
-    "dedup_cluster",
-    "pii_scrub",
-    "sample_stratified",
-    "split_train_test",
-    "kmeans_train",
-    "attribution_join",
-    "mrf_variant_codes",
-    "decontaminate",
-    "multimodal_framesample",
-    "text_chunk_sliding",
-    "pack_sequences",
-    "embedding_quantize",
-    "corr_stats",
-    "bm25_search",
-    "histogram_prices",
-    "profile_columns",
-    "zorder_tiles",
-    "scd2_intervals",
-    "fuzzy_match_names",
-    "drift_ks",
-    "text_repetition",
-    "corpus_mix",
-    "multimodal_audio_energy",
-    "rank_fusion_rrf",
-    "ngram_counts",
-    "unigram_logprob_score",
-    "shard_manifest",
-    "tokenize_pad_ids",
-    "quality_funnel",
-    "dedup_graph_stats",
-    "embedding_drift_centroids",
-    "corpus_overlap",
-    "anomaly_mad",
-    "token_length_histogram",
-    "class_weights",
-    "mrf_silver_providers",
-    "event_funnel",
-    "dedup_containment",
-    "graph_triangles",
-    "ann_recall_eval",
-    "cdc_apply_changelog",
-    "mrf_bronze_elements",
-    "rolling_user_spend",
-    "domain_cap",
-    "quality_deciles",
-    "lag_features",
-    "grouping_sets_revenue",
-    "dup_rate_by_source",
-    "semantic_dedup",
-    "pq_encode",
-    "intra_corpus_dup_ngrams",
-    "retention_cohorts",
-    "ewma_user_value",
-    "auc_score",
-    "graph_pagerank",
-    "bloom_prefilter",
-    "top_unshipped_orders",
-    "token_cooccurrence_lift",
-    "skyline_pareto",
-    "snapshot_diff",
-    "compaction_bins",
-    "calibration_bins",
-    "interval_union_length",
-    "event_transition_matrix",
-    "mode_per_group",
-    "sessionize_native",
-    "sliding_window_counts",
-    "pareto_share_curve",
-    "sample_weighted_by_score",
-    "key_skew_report",
-    "churn_labels",
-    "minhash_error_eval",
-    "pca_power_iteration",
-    "knn_classify",
-    "cluster_quality_summary",
-    "ngram_novelty_score",
-    "seasonal_profile",
-    "join_size_estimate",
-]
-
-
-def _full_headline() -> list[str]:
-    from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
-        all_queries,
-    )
-
-    registry = list(all_queries())
-    missing = [n for n in registry if n not in set(_CURATED)]
-    return _CURATED + missing
-
-
-HEADLINE = _full_headline()
 
 
 def bench_splitter() -> float:
@@ -194,16 +75,15 @@ def bench_ingest(spark, p: str) -> tuple[float, float, float]:
     Warm reuses the cached manifest (the steady state for repeated reads of
     an immutable file, e.g. silver's three header_key branches).
 
-    The headline numbers come from a ~1 GB file: at 200 MB a warm pass is
-    under a second, so per-job fixed overhead (noop write job setup, Python
-    planner round-trip) dominated the measurement and host noise swamped
-    the signal (r11 verdict: cold "regressed" 9.53 -> 8.58 GB/min while
-    discovery-only improved). The 200 MB file is still measured once and
-    reported as *_small_* so the fixed-overhead share stays quantified."""
+    The file is ~1 GB: at 200 MB a warm pass is under a second, so per-job
+    fixed overhead (noop write job setup, Python planner round-trip)
+    dominated the measurement and host noise swamped the signal (r11
+    verdict: cold "regressed" 9.53 -> 8.58 GB/min while discovery-only
+    improved)."""
     from hls_payer_mrf_sparkstreaming_spark.sources import datasource as ds
 
     size = os.path.getsize(p)
-    ds.read_payer_mrf(spark, p).write.format("noop").mode("overwrite").save()
+    noop(ds.read_payer_mrf(spark, p))
     cold = float("inf")
     for _ in range(RUNS):
         # partitions() runs in a (reused) Python planner worker, so clearing
@@ -211,21 +91,23 @@ def bench_ingest(spark, p: str) -> tuple[float, float, float]:
         # mtime instead, which changes the cache key and forces a rescan
         os.utime(p)
         t0 = time.time()
-        ds.read_payer_mrf(spark, p).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        noop(ds.read_payer_mrf(spark, p))
         cold = min(cold, time.time() - t0)
-    warm = float("inf")
+    warm_s = float("inf")
     for _ in range(RUNS):
         t0 = time.time()
-        ds.read_payer_mrf(spark, p).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        warm = min(warm, time.time() - t0)
-    return size / 1e9, size / 1e9 / cold * 60, size / 1e9 / warm * 60
+        noop(ds.read_payer_mrf(spark, p))
+        warm_s = min(warm_s, time.time() - t0)
+    return size / 1e9, size / 1e9 / cold * 60, size / 1e9 / warm_s * 60
 
 
-def _unpersist_all(spark) -> None:
+def noop(df) -> None:
+    """Materialize df through the noop sink: every row is computed, none
+    is kept."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def reset(spark) -> None:
     """Drop leftover persisted RDDs (lazy localCheckpoints from self-join
     queries) so storage from one query can't distort the next one's time.
 
@@ -254,137 +136,152 @@ def _unpersist_all(spark) -> None:
         pass
 
 
-def main() -> None:
-    from hls_payer_mrf_sparkstreaming_spark.session import get_spark
+def warm(spark, queries, name: str, sf_dir: str) -> None:
+    """Warm the session caches query `name` reads, untimed, so its timed
+    sample measures the consumer's marginal cost (the session steady
+    state) rather than a one-time build that reset() just dropped.
 
-    mrf_gb_per_min = bench_splitter()
-
-    spark = get_spark(
-        app_name="bench",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    ingest_gb, mrf_ingest_gb_per_min, mrf_ingest_warm_gb_per_min = (
-        bench_ingest(spark, _ingest_file("mrf_1gb.json", 450000, 20000))
-    )
-    ingest_small_gb, ingest_small, ingest_small_warm = bench_ingest(
-        spark, _ingest_file("mrf_200mb.json", 90000, 4000)
-    )
-
-    import statistics
-
-    import __spark_entry__ as entry_mod
-
-    queries = entry_mod.queries()
-    timings: dict[str, float] = {}
-    spreads: dict[str, float] = {}
-
-    # The near-dup edge list is a session-level artifact (dedup.py's
-    # EDGE_CACHE): a real session builds it ONCE and every graph-family
-    # query — INCLUDING neardup_pairs_lsh, whose registered entry reads
-    # the shared edge list like any other consumer — shares it.
-    # _unpersist_all would force each of them to re-run the whole LSH
-    # edge pipeline inside its timed pass, so their numbers would measure
-    # the build N more times instead of the consumer's marginal cost (the
-    # session steady state). Warm the cache untimed before every timed
-    # sample of those queries; the one-time BUILD cost is measured
-    # separately and fully cold below (edge_build_sec), so it stays
-    # visible instead of being smeared across six query medians.
+    - The near-dup edge list (dedup.py's EDGE_CACHE) is built once per
+      session and shared by every graph-family query, INCLUDING
+      neardup_pairs_lsh, whose registered entry reads the shared edge
+      list like any other consumer. Its cold build is bench.py's
+      separate edge_build_sec, so it is not smeared across six medians.
+    - The silver cache (mrf_queries.py's SILVER_CACHE): without warming,
+      whichever silver query ran first paid the full parse inside its
+      timed pass (r11: mrf_silver_prices spread_rel 5.64). Running the
+      query itself untimed warms every fixture it touches
+      (mrf_payer_compare reads two). The cold parse is silver_build_sec.
+    """
     from hls_payer_mrf_sparkstreaming_spark.operators.dedup import (
         EDGE_CONSUMER_QUERIES,
         neardup_edges,
     )
+    from hls_payer_mrf_sparkstreaming_spark.plans.mrf_queries import (
+        SILVER_CONSUMER_QUERIES,
+    )
 
-    def _warm_edges_if_consumer(name: str) -> None:
-        if name not in EDGE_CONSUMER_QUERIES and name != "neardup_pairs_lsh":
-            return
-        neardup_edges(spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
+    if name in EDGE_CONSUMER_QUERIES or name == "neardup_pairs_lsh":
+        noop(neardup_edges(spark, sf_dir))
+    if name in SILVER_CONSUMER_QUERIES:
+        noop(queries[name](spark, sf_dir))
 
-    # Same discipline for the session silver cache: _unpersist_all's
-    # clearCache drops the parsed in_network/providers storage between
-    # samples, so without warming, whichever silver query ran first paid
-    # the full parse inside its timed pass (r11: mrf_silver_prices
-    # spread_rel 5.64). The one-time parse is measured separately and
-    # fully cold below (silver_build_sec); each consumer's timed pass
-    # then measures its marginal warm cost — running the query itself
-    # untimed warms every fixture it touches (payer_compare reads two).
+
+def _last_job_id(spark) -> int:
+    # max job ID, not len(): the AppStatusStore evicts jobs past
+    # spark.ui.retainedJobs (~1000), so len() deltas go NEGATIVE once a
+    # long run crosses the eviction horizon (the r14 first-sweep bug: 9
+    # queries reported -87..-98 jobs). Job IDs are monotonic, so a max-ID
+    # delta is eviction-immune. It counts every job started between two
+    # snapshots, cluster-wide, so it assumes no concurrent or grouped job
+    # submission.
+    tracker = spark.sparkContext.statusTracker()
+    return max(tracker.getJobIdsForGroup(None) or [-1])
+
+
+def sample(spark, fn, sf_dir: str) -> dict:
+    """One timed run of `fn(spark, sf_dir)` through the noop sink.
+
+    build_s is the DataFrame construction, exec_s the noop write (which
+    analyzes and plans its own command, so no planning is forced here)
+    and wall_s their sum. jobs counts the Spark jobs the write started.
+    The job-ID snapshot between the two phases is outside both timers."""
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    build_s = time.perf_counter() - t0
+    j0 = _last_job_id(spark)
+    t1 = time.perf_counter()
+    noop(df)
+    exec_s = time.perf_counter() - t1
+    return {
+        "build_s": build_s,
+        "exec_s": exec_s,
+        "wall_s": build_s + exec_s,
+        "jobs": _last_job_id(spark) - j0,
+    }
+
+
+def measure(spark, fn, sf_dir: str, runs: int, before=lambda: None) -> list:
+    """`runs` samples of `fn`, each on a reset session.
+
+    One untimed warm-up first compiles the plan and primes the OS file
+    cache. Then each sample calls before() untimed (the caller's warm-up:
+    a cache warm, a cache clear, a conf toggle), times the run and resets
+    the session."""
+    noop(fn(spark, sf_dir))
+    reset(spark)
+    samples = []
+    for _ in range(runs):
+        before()
+        samples.append(sample(spark, fn, sf_dir))
+        reset(spark)
+    return samples
+
+
+def _walls(samples: list) -> list[float]:
+    return [s["wall_s"] for s in samples]
+
+
+def main() -> None:
+    import functools
+    import statistics
+
+    import __spark_entry__ as entry_mod
+    from hls_payer_mrf_sparkstreaming_spark.operators.dedup import (
+        neardup_edges,
+    )
     from hls_payer_mrf_sparkstreaming_spark.plans.mrf_queries import (
         SILVER_CACHE,
-        SILVER_CONSUMER_QUERIES,
         build_silver_cached,
         fixture_path,
     )
+    from hls_payer_mrf_sparkstreaming_spark.session import get_spark
 
-    def _warm_silver_if_consumer(name: str) -> None:
-        if name not in SILVER_CONSUMER_QUERIES:
-            return
-        queries[name](spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
+    mrf_gb_per_min = bench_splitter()
+
+    spark = get_spark(app_name="bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
+
+    ingest_gb, mrf_ingest_gb_per_min, mrf_ingest_warm_gb_per_min = (
+        bench_ingest(spark, _ingest_file("mrf_1gb.json", 450000, 20000))
+    )
+
+    queries = entry_mod.queries()
 
     # silver_build_sec: the cold shared-fixture parse (chunk discovery ->
     # ranged reads -> from_json of both branches), every sample paying
-    # the full build (cache cleared between samples). One untimed warmup
-    # primes plan compilation + OS file cache, mirroring edge_build_sec.
-    def _build_silver_materialized() -> None:
+    # the full build (cache cleared before each sample). The in_network
+    # write runs inside the build phase; the sample's write is the
+    # providers branch.
+    def _build_silver(spark, _sf_dir):
         t = build_silver_cached(
             spark, fixture_path(), chunktargetbytes=65536
         )
-        t.in_network.write.format("noop").mode("overwrite").save()
-        t.providers_x_payer.write.format("noop").mode("overwrite").save()
+        noop(t.in_network)
+        return t.providers_x_payer
 
-    _build_silver_materialized()
-    silver_build_samples = []
-    for _ in range(RUNS):
-        _unpersist_all(spark)
-        SILVER_CACHE.clear()
-        t0 = time.time()
-        _build_silver_materialized()
-        silver_build_samples.append(time.time() - t0)
-    _unpersist_all(spark)
+    silver_build_samples = _walls(
+        measure(spark, _build_silver, SF_DIR, RUNS, before=SILVER_CACHE.clear)
+    )
     silver_build_sec = round(statistics.median(silver_build_samples), 3)
 
     # edge_build_sec: the cold LSH edge-cache build (shingle -> 32-perm
     # minhash -> band self-join -> exact verify -> checkpoint), every
-    # sample paying the FULL pipeline (_unpersist_all clears the session
-    # cache AND deletes the checkpoint files between samples). One
-    # untimed warmup first — same discipline as the suite loop — so the
-    # median measures the build, not one-off plan compilation + OS file
-    # cache priming (measured: 8.5 s first sample vs 3.1 s steady state)
-    neardup_edges(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    edge_build_samples = []
-    for _ in range(RUNS):
-        _unpersist_all(spark)
-        t0 = time.time()
-        neardup_edges(spark, SF_DIR).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        edge_build_samples.append(time.time() - t0)
-    _unpersist_all(spark)
+    # sample paying the FULL pipeline (reset() clears the session cache
+    # AND deletes the checkpoint files). The untimed warm-up keeps one-off
+    # plan compilation + OS file cache priming out of the median
+    # (measured: 8.5 s first sample vs 3.1 s steady state).
+    edge_build_samples = _walls(measure(spark, neardup_edges, SF_DIR, RUNS))
     edge_build_sec = round(statistics.median(edge_build_samples), 3)
 
-    for name in HEADLINE:
-        fn = queries[name]
-        # warm-up pass compiles the plan + primes file cache; then N
-        # measured passes -> median (host interference makes single or
-        # even min-of-N passes unstable round-to-round; the median plus a
-        # reported spread lets a reader judge whether a delta is signal)
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        _unpersist_all(spark)
-        samples = []
-        for _ in range(RUNS):
-            _warm_edges_if_consumer(name)
-            _warm_silver_if_consumer(name)
-            t0 = time.time()
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            _unpersist_all(spark)
+    # median of N per query (host interference makes single or even
+    # min-of-N passes unstable round-to-round; the median plus a reported
+    # spread lets a reader judge whether a delta is signal)
+    timings: dict[str, float] = {}
+    spreads: dict[str, float] = {}
+    for name, fn in queries.items():
+        before = functools.partial(warm, spark, queries, name, SF_DIR)
+        samples = _walls(measure(spark, fn, SF_DIR, RUNS, before=before))
         med = statistics.median(samples)
         timings[name] = round(med, 3)
         spreads[name] = round((max(samples) - min(samples)) / med, 2)
@@ -431,17 +328,16 @@ def main() -> None:
             round(s, 3) for s in silver_build_samples
         ],
         "ingest_file_gb": round(ingest_gb, 3),
-        "ingest_small_file_gb": round(ingest_small_gb, 3),
         "runs": RUNS,
         "sf": sf_val,
-        "cpus": CPUS,
+        "cpus": cpus,
         "git_sha": git_sha,
     }
     # r13 VERDICT item 8: the c8 scaling run used to overwrite the c32
     # details — write a per-core-count file too, so both survive a round
     details_path = os.path.join(REPO_ROOT, "bench_details.json")
     details_cpu_path = os.path.join(
-        REPO_ROOT, f"bench_details_c{CPUS}.json"
+        REPO_ROOT, f"bench_details_c{cpus}.json"
     )
     for p in (details_path, details_cpu_path):
         with open(p, "w") as f:
@@ -457,7 +353,7 @@ def main() -> None:
                 "metric": "per_query_medians",
                 "unit": "sec",
                 "sf": sf_val,
-                "cpus": CPUS,
+                "cpus": cpus,
                 "git_sha": git_sha,
                 "queries_sec_median": timings,
                 "query_spread_rel": spreads,
@@ -482,10 +378,8 @@ def main() -> None:
         "mrf_gb_per_min": round(mrf_gb_per_min, 2),
         "mrf_ingest_gb_per_min": round(mrf_ingest_gb_per_min, 2),
         "mrf_ingest_warm_gb_per_min": round(mrf_ingest_warm_gb_per_min, 2),
-        "mrf_ingest_small_gb_per_min": round(ingest_small, 2),
-        "mrf_ingest_small_warm_gb_per_min": round(ingest_small_warm, 2),
         "ingest_file_gb": round(ingest_gb, 2),
-        "cpus": CPUS,
+        "cpus": cpus,
     }
     line = json.dumps(record, separators=(",", ":"))
     if len(line) > 1900:  # last-resort: keep the line parseable over detail
@@ -497,7 +391,7 @@ def main() -> None:
             # from a fixed 8 — the 0.3 s tail is noise, the slow head is
             # the per-query perf signal) and point at the sidecar
             record.pop("queries")
-            record["detail"] = f"bench_details_c{CPUS}.json"
+            record["detail"] = f"bench_details_c{cpus}.json"
             by_cost = sorted(timings, key=timings.get, reverse=True)
             record["slowest"] = {}
             line = json.dumps(record, separators=(",", ":"))

@@ -41,8 +41,6 @@ os.environ["PYTHONPATH"] = (
     REPO_ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 )
 
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-
 
 def _gen_one(args: tuple[str, int, int, int]) -> int:
     path, n_items, n_refs, seed = args
@@ -108,7 +106,8 @@ def main() -> None:
     )
     from hls_payer_mrf_sparkstreaming_spark.session import get_spark
 
-    spark = get_spark(master=f"local[{CPUS}]")
+    spark = get_spark(app_name="bench_pipeline")
+    cpus = spark.sparkContext.defaultParallelism
 
     if a.stage == "bronze":
         import shutil
@@ -137,7 +136,7 @@ def main() -> None:
                     "gen_sec": round(gen_sec, 1),
                     "bronze_sec": round(bronze_sec, 1),
                     "bronze_rows": n,
-                    "cpus": CPUS,
+                    "cpus": cpus,
                 }
             )
         )
@@ -208,7 +207,7 @@ def main() -> None:
                 "silver_ctas_sec": round(silver_sec, 1),
                 "gold_query_sec": round(gold_sec, 2),
                 "gold_rows": n,
-                "cpus": CPUS,
+                "cpus": cpus,
             }
         )
     )

@@ -48,7 +48,6 @@ os.environ["PYTHONPATH"] = (
 )
 
 SRC = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPLICAS = 10
 OFFSET = 10_000_000
 
@@ -172,44 +171,39 @@ def make_scaled(out: str) -> None:
             )
 
 
-# Graph-family queries consume the session-level near-dup edge cache;
-# mirror bench.py: warm the edge cache untimed so their ratio reflects
-# the consumer's own scaling, not the edge build repeated N times. The
-# canonical set lives next to the cache itself
-# (operators.dedup.EDGE_CONSUMER_QUERIES). UNLIKE bench.py (where
-# neardup_pairs_lsh times the warm consumer read and the cold build is
-# the separate edge_build_sec metric), neardup_pairs_lsh here stays
-# COLD on purpose: its ratio IS the edge build's 10x-data scaling, the
-# number that caught the r8 candidate-volume blowup.
-
-
 def time_queries(
     spark, queries, sf_dir: str, runs: int, roster=None
 ) -> dict[str, float]:
-    sys.path.insert(0, REPO_ROOT)
-    from bench import _unpersist_all
+    from bench import measure, noop
 
     from hls_payer_mrf_sparkstreaming_spark.operators.dedup import (
         EDGE_CONSUMER_QUERIES,
         neardup_edges,
     )
 
+    # Graph-family queries consume the session-level near-dup edge cache;
+    # warm it untimed so their ratio reflects the consumer's own scaling,
+    # not the edge build repeated N times. UNLIKE bench.warm (where
+    # neardup_pairs_lsh times the warm consumer read and the cold build is
+    # the separate edge_build_sec metric), neardup_pairs_lsh here stays
+    # COLD on purpose: its ratio IS the edge build's 10x-data scaling, the
+    # number that caught the r8 candidate-volume blowup.
+    def _warm_edges(name: str) -> None:
+        if name in EDGE_CONSUMER_QUERIES:
+            noop(neardup_edges(spark, sf_dir))
+
     out: dict[str, float] = {}
     for name in roster if roster is not None else QUERIES:
-        fn = queries[name]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        _unpersist_all(spark)
-        samples = []
-        for _ in range(runs):
-            if name in EDGE_CONSUMER_QUERIES:
-                neardup_edges(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-            _unpersist_all(spark)
-        out[name] = round(statistics.median(samples), 3)
+        samples = measure(
+            spark,
+            queries[name],
+            sf_dir,
+            runs,
+            before=lambda: _warm_edges(name),
+        )
+        out[name] = round(
+            statistics.median(s["wall_s"] for s in samples), 3
+        )
     return out
 
 
@@ -247,12 +241,9 @@ def main() -> None:
     import __spark_entry__ as entry_mod
     from hls_payer_mrf_sparkstreaming_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="bench_scale",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
+    spark = get_spark(app_name="bench_scale")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
     queries = entry_mod.queries()
 
     small = time_queries(spark, queries, SRC, a.runs, roster)
@@ -271,7 +262,7 @@ def main() -> None:
         "sf1_sec": big,
         "ratio": ratios,
         "ratio_max": max(v for v in ratios.values() if v),
-        "cpus": CPUS,
+        "cpus": cpus,
     }
     # sidecar write so a truncated/filtered stdout capture can't lose the
     # run (cost ~20 min to reproduce); --only iteration passes never

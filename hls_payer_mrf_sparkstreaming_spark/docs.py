@@ -209,25 +209,15 @@ if __name__ == "__main__":
 
 
 def registry_counts() -> dict[str, int]:
-    """Live operator/oracle/bench counts — the single source for the
-    README's headline numbers (drift-guarded by tests/test_plans.py)."""
-    import importlib.util
-
+    """Live operator/oracle counts — the single source for the README's
+    headline numbers (drift-guarded by tests/test_plans.py). bench.py
+    times every registered query, so `operators` is also the suite size."""
     from hls_payer_mrf_sparkstreaming_spark.operators.suite import (
         all_queries,
     )
 
     q = all_queries()
-    # bench.HEADLINE is curated-order + registry tail (computed at import);
-    # import the module rather than regexing its source so the count stays
-    # live
-    spec = importlib.util.spec_from_file_location(
-        "_bench_for_counts", __file__.rsplit("/", 2)[0] + "/bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
     return {
         "operators": len(q),
         "oracled": sum(1 for p in q.values() if p.oracle),
-        "headline": len(bench.HEADLINE),
     }

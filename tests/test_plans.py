@@ -531,9 +531,9 @@ def test_readme_counts_are_current():
     path = os.path.join(os.path.dirname(__file__), "..", "README.md")
     with open(path) as f:
         readme = f.read()
-    assert f"{c['headline']} queries" in readme, (
-        f"README suite size drifted — bench.py has {c['headline']} "
-        "headline queries"
+    assert f"{c['operators']} queries" in readme, (
+        f"README suite size drifted — bench.py times all {c['operators']} "
+        "registered queries"
     )
     assert f"{c['oracled']} of {c['operators']} `queries()` entries" in (
         readme

@@ -19,7 +19,6 @@ import argparse
 import os
 import statistics
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
@@ -28,7 +27,6 @@ os.environ["PYTHONPATH"] = (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def main() -> None:
@@ -43,23 +41,11 @@ def main() -> None:
     )
     a = ap.parse_args()
 
-    from bench import _unpersist_all
-
     import __spark_entry__ as entry_mod
-    from hls_payer_mrf_sparkstreaming_spark.operators.dedup import (
-        EDGE_CONSUMER_QUERIES,
-        neardup_edges,
-    )
-    from hls_payer_mrf_sparkstreaming_spark.plans.mrf_queries import (
-        SILVER_CONSUMER_QUERIES,
-    )
+    from bench import measure, warm
     from hls_payer_mrf_sparkstreaming_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="ab_conf",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
+    spark = get_spark(app_name="ab_conf")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
     confs = [kv.split("=", 1) for kv in a.conf]
@@ -79,33 +65,23 @@ def main() -> None:
             else:
                 spark.conf.set(k, defaults[k])
 
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def _warm(name):
-        if name in EDGE_CONSUMER_QUERIES or name == "neardup_pairs_lsh":
-            _noop(neardup_edges(spark, SF_DIR))
-        if name in SILVER_CONSUMER_QUERIES:
-            _noop(queries[name](spark, SF_DIR))
-
     tot = {"A": 0.0, "B": 0.0}
     for name in a.names:
-        fn = queries[name]
-        spark.sparkContext.setJobDescription(name)
-        _arm(False)
-        _noop(fn(spark, SF_DIR))  # untimed warmup
-        _unpersist_all(spark)
-        samples: dict[str, list[float]] = {"A": [], "B": []}
-        for i in range(2 * a.runs):
-            arm = "B" if i % 2 else "A"
-            _arm(arm == "B")
-            _warm(name)
-            t0 = time.time()
-            _noop(fn(spark, SF_DIR))
-            samples[arm].append(time.time() - t0)
-            _unpersist_all(spark)
-        ma = statistics.median(samples["A"])
-        mb = statistics.median(samples["B"])
+        arms = iter("AB" * a.runs)
+
+        def before() -> None:
+            _arm(next(arms) == "B")
+            warm(spark, queries, name, SF_DIR)
+
+        _arm(False)  # the untimed warm-up runs on the A arm
+        walls = [
+            s["wall_s"]
+            for s in measure(
+                spark, queries[name], SF_DIR, 2 * a.runs, before=before
+            )
+        ]
+        ma = statistics.median(walls[0::2])
+        mb = statistics.median(walls[1::2])
         tot["A"] += ma
         tot["B"] += mb
         print(

@@ -1,13 +1,16 @@
 #!/usr/bin/env python
-"""Time a named subset of registry queries with bench.py's methodology
-(one untimed warmup, N timed passes, median + spread, noop sink,
-_unpersist_all between samples) so a single operator's before/after can
-be measured in ~seconds instead of re-running the full 245-query bench.
+"""Time registry queries with bench.py's measured-run primitive (one
+untimed warm-up, then N samples, each after the query's cache warm and
+followed by a session reset) and print one record per query: wall-time
+median/min/max/samples plus the median build_s/exec_s split and the
+Spark job count of the noop write.
 
-Usage: python tools/bench_some.py q1 q2 ... [--runs 5] [--explain DIR]
+With no names it times the whole registry; --runs 1 then gives the
+registry-wide job-count sweep. A single operator's before/after takes
+seconds instead of a full bench.py pass.
 
-With --explain DIR, also writes DIR/<query>.txt containing
-df.explain(formatted) for each query (the r13 plan-evidence deliverable).
+Usage: python tools/bench_some.py [q1 q2 ...] [--runs 3] [--out FILE]
+                                  [--conf k=v ...]
 """
 
 from __future__ import annotations
@@ -17,7 +20,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
@@ -26,81 +28,65 @@ os.environ["PYTHONPATH"] = (
 )
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+def record(samples: list[dict]) -> dict:
+    walls = [s["wall_s"] for s in samples]
+    return {
+        "median": round(statistics.median(walls), 3),
+        "min": round(min(walls), 3),
+        "max": round(max(walls), 3),
+        "samples": [round(w, 3) for w in walls],
+        "build_s": round(statistics.median(s["build_s"] for s in samples), 3),
+        "exec_s": round(statistics.median(s["exec_s"] for s in samples), 3),
+        # median_low keeps the job count an integer
+        "jobs": statistics.median_low(s["jobs"] for s in samples),
+    }
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*", help="default: the whole registry")
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--explain", default=None)
+    ap.add_argument("--out", default=None, help="write the JSON here")
     ap.add_argument(
         "--conf", action="append", default=[], help="extra k=v spark conf"
     )
     a = ap.parse_args()
 
-    from bench import _unpersist_all
+    import functools
 
     import __spark_entry__ as entry_mod
-    from hls_payer_mrf_sparkstreaming_spark.operators.dedup import (
-        EDGE_CONSUMER_QUERIES,
-        neardup_edges,
-    )
-    from hls_payer_mrf_sparkstreaming_spark.plans.mrf_queries import (
-        SILVER_CONSUMER_QUERIES,
-    )
+    from bench import measure, warm
     from hls_payer_mrf_sparkstreaming_spark.session import get_spark
 
     spark = get_spark(
         app_name="bench_some",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
         extra_conf=dict(kv.split("=", 1) for kv in a.conf),
     )
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
 
-    def _noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def _warm(name):
-        if name in EDGE_CONSUMER_QUERIES or name == "neardup_pairs_lsh":
-            _noop(neardup_edges(spark, SF_DIR))
-        if name in SILVER_CONSUMER_QUERIES:
-            _noop(queries[name](spark, SF_DIR))
-
     out = {}
-    for name in a.names:
-        fn = queries[name]
-        spark.sparkContext.setJobDescription(name)
-        if a.explain:
-            os.makedirs(a.explain, exist_ok=True)
-            txt = fn(spark, SF_DIR)._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
-            with open(os.path.join(a.explain, f"{name}.txt"), "w") as f:
-                f.write(txt)
-        _noop(fn(spark, SF_DIR))  # warmup: plan compile + file cache
-        _unpersist_all(spark)
-        samples = []
-        for _ in range(a.runs):
-            _warm(name)
-            t0 = time.time()
-            _noop(fn(spark, SF_DIR))
-            samples.append(time.time() - t0)
-            _unpersist_all(spark)
-        med = statistics.median(samples)
-        out[name] = {
-            "median": round(med, 3),
-            "min": round(min(samples), 3),
-            "max": round(max(samples), 3),
-            "samples": [round(s, 3) for s in samples],
-        }
+    for name in a.names or queries:
+        before = functools.partial(warm, spark, queries, name, SF_DIR)
+        out[name] = record(
+            measure(spark, queries[name], SF_DIR, a.runs, before=before)
+        )
         print(f"{name}: {out[name]}", flush=True)
+    result = {
+        "sf_dir": SF_DIR,
+        "cpus": spark.sparkContext.defaultParallelism,
+        "queries": out,
+    }
     spark.stop()
-    print(json.dumps(out, indent=1, sort_keys=True))
+    if a.out:
+        os.makedirs(os.path.dirname(os.path.abspath(a.out)), exist_ok=True)
+        with open(a.out, "w") as f:
+            json.dump(result, f, indent=1, sort_keys=True)
+        print(f"written to {a.out}", flush=True)
+    else:
+        print(json.dumps(result, indent=1, sort_keys=True))
 
 
 if __name__ == "__main__":

@@ -16,7 +16,6 @@ REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
 def main() -> None:
@@ -29,11 +28,7 @@ def main() -> None:
     from pyspark.sql import functions as F
     from hls_payer_mrf_sparkstreaming_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="hash_queries",
-        master=f"local[{CPUS}]",
-        shuffle_partitions=CPUS,
-    )
+    spark = get_spark(app_name="hash_queries")
     spark.sparkContext.setLogLevel("ERROR")
     queries = entry_mod.queries()
     out = {}

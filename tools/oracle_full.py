@@ -55,7 +55,7 @@ def main() -> None:
     queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
 
-    spark = get_spark(app_name="oracle_full", master="local[8]")
+    spark = get_spark(app_name="oracle_full")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in [

@@ -8,8 +8,9 @@ gigabytes ... 5-7 GB/min splitter"). The per-round bench (bench.py) runs
 the query suite at sf0.1 plus a 200 MB splitter pass; THIS script is the
 end-to-end ingest story at the reference's data point and beyond:
 
-  1. generate a >= 2 GB corpus of DISTRIBUTED_DISCOVERY_MIN_FILES MRF
-     files (so discovery itself runs as a Spark job, the 100 TB shape),
+  1. generate a >= 2 GB corpus of 16 MRF files (a directory read:
+     driver-side discovery scans the files on a thread pool, the
+     many-file shape of a large corpus),
   2. time bronze -> silver star model -> CTAS of all six silver tables
      (plans/silver.py save_all, the demo notebook's CREATE TABLE chain),
   3. time the parameterized gold shoppable-price query against the SAVED

@@ -191,37 +191,15 @@ def _classify(buf, start: int = 0):
     return pos, k
 
 
-def _structural_candidates(buf, start: int):
-    """Scan ``buf[start:]`` assuming the scan starts OUTSIDE any string at
-    relative depth 0 (i.e. at an element boundary inside a top-level array).
-
-    Returns ``(pos, kind)`` int64/int8 arrays of *relative-to-start* offsets:
-      kind 0 — ``,`` at depth 0 (element separator)
-      kind 1 — ``}``/``]`` closing an element (depth returns to 0)
-      kind 2 — ``]`` closing the surrounding array (depth -1)
-
-    Bytes after an unterminated trailing string/element produce no false
-    candidates: unterminated strings mask everything after them as in-string,
-    unterminated composites keep depth > 0.
-
-    Implementation note: one LUT pass classifies every byte (_classify),
-    then all sequential math (quote parity, escape runs, bracket depth)
-    runs in *compressed position space* — only over the structural
-    characters (typically a few % of bytes) — because full-array cumsums
-    are the dominant cost otherwise (_select_candidates).
-    """
-    pos, k = _classify(buf, start)
-    if pos.size == 0:
-        return _EMPTY
-    return _select_candidates(pos, k)
-
-
 def _select_candidates(pos, k):
     """Stage B of the structural scan: given stage-A classification
     arrays (any position space, assumed to start OUTSIDE a string at
     relative depth 0), resolve escapes, quote parity and bracket depth in
     compressed space and return the candidate ``(pos, kind)`` arrays in
-    the SAME position space."""
+    the SAME position space:
+      kind 0 — ``,`` at depth 0 (element separator)
+      kind 1 — ``}``/``]`` closing an element (depth returns to 0)
+      kind 2 — ``]`` closing the surrounding array (depth -1)"""
     quote = k == 1
     if (k == 2).any():
         # escaped quote <=> immediately preceded by an odd-length run of
@@ -283,7 +261,6 @@ def _to_abs(item, fstart: int):
     return pos, k
 
 
-_PREFETCH_ENV = "SPARK_GRAFT_SCAN_PREFETCH"
 _PREFETCH_MIN_READ = 1 << 20  # tiny read_size (tests) stays synchronous
 _PREFETCH_DEPTH = 3
 _CLASSIFY_POOL = None
@@ -395,7 +372,7 @@ class ChunkScanner:
         stream: BinaryIO,
         chunk_target_bytes: int = DEFAULT_CHUNK_TARGET,
         read_size: int = DEFAULT_READ_SIZE,
-        prefetch: bool | None = None,
+        prefetch: bool = True,
     ):
         self._stream = stream
         self._target = max(int(chunk_target_bytes), 1024)
@@ -412,11 +389,7 @@ class ChunkScanner:
         # offset space: [fstart, fend, item] where item is a Future (from
         # the classify pool) or a resolved (pos_abs int64, k uint8) pair
         self._cls_blocks: list[list] = []
-        import os
-
         self._pf: _Prefetcher | None = None
-        if prefetch is None:  # env is the default, not an override channel
-            prefetch = os.environ.get(_PREFETCH_ENV, "1") != "0"
         self._prefetch = prefetch and self._read_size >= _PREFETCH_MIN_READ
 
     # -- buffer management --------------------------------------------------
@@ -470,8 +443,9 @@ class ChunkScanner:
         ``fpos`` (callers guarantee ``fpos == self._base``), served from
         the per-block stage-A cache: resolve pending classify futures,
         slice at ``fpos``, concatenate, and run stage B once. Returns
-        buffer-relative (pos, kind) — identical to
-        ``_structural_candidates(self._buf, fpos - self._base)``."""
+        buffer-relative (pos, kind) — what stage A + stage B over
+        ``self._buf`` from ``fpos - self._base`` would give, since block
+        classifications concatenate exactly (see _classify)."""
         parts_p: list = []
         parts_k: list = []
         for blk in self._cls_blocks:
@@ -812,15 +786,12 @@ def scan_chunks(
     path: str,
     chunk_target_bytes: int = DEFAULT_CHUNK_TARGET,
     read_size: int = DEFAULT_READ_SIZE,
-    prefetch: bool | None = None,
 ) -> Iterator[Chunk]:
     """Scan a (local or remote) MRF file and yield its chunk manifest."""
     from hls_payer_mrf_sparkstreaming_spark.sources.io import open_input
 
     with open_input(path) as f:
-        yield from ChunkScanner(
-            f, chunk_target_bytes, read_size, prefetch=prefetch
-        ).scan()
+        yield from ChunkScanner(f, chunk_target_bytes, read_size).scan()
 
 
 # ---------------------------------------------------------------------------

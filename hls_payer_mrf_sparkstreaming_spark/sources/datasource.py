@@ -193,17 +193,6 @@ class _Options:
         return str(self.get("includeoffsets", "false")).lower() == "true"
 
     @property
-    def manifest_file(self) -> str | None:
-        """Path to a precomputed chunk-manifest (JSONL of
-        ``{"path","start","end","header_key"}``). When set, ``partitions()``
-        skips scanning entirely and plans straight from the manifest — this
-        is how distributed discovery hands executor-scanned manifests to
-        the planner (see ``build_manifest_distributed``). The path is opened
-        through ``mrf_io.open_input``, so it may live on any pyarrow-fs
-        scheme the data itself uses."""
-        return self.get("manifestfile")
-
-    @property
     def max_chunks_per_batch(self) -> int:
         """0 (default) = discover the whole file in the first micro-batch.
 
@@ -276,49 +265,6 @@ def _scan_chunks_cached(path: str, chunk_target: int, buffersize: int):
     )
 
 
-def _load_manifest_rows(manifest: str) -> list[dict]:
-    """Read a chunk manifest: either a single JSONL file or a DIRECTORY of
-    JSONL shards (the executor-written layout of
-    ``build_manifest_distributed``) — local or remote (``scheme://`` dirs
-    are listed through pyarrow). Shard order is irrelevant — each row is
-    a self-contained (path, start, end, header_key) byte range."""
-    import json
-
-    if mrf_io.is_remote(manifest):
-        import pyarrow.fs as pafs
-
-        fs, rel = pafs.FileSystem.from_uri(manifest)
-        if fs.get_file_info(rel).type == pafs.FileType.Directory:
-            scheme = manifest.split("://", 1)[0]
-            files = sorted(
-                f"{scheme}://{i.path}"
-                for i in fs.get_file_info(
-                    pafs.FileSelector(rel, recursive=False)
-                )
-                if i.is_file
-                and not os.path.basename(i.path).startswith(("_", "."))
-            )
-        else:
-            files = [manifest]
-    elif os.path.isdir(manifest):
-        files = sorted(
-            os.path.join(manifest, f)
-            for f in os.listdir(manifest)
-            if not f.startswith(("_", "."))
-        )
-    else:
-        files = [manifest]
-    rows: list[dict] = []
-    for fp in files:
-        with mrf_io.open_input(fp) as f:
-            rows.extend(
-                json.loads(line)
-                for line in f.read().decode("utf-8").splitlines()
-                if line
-            )
-    return rows
-
-
 class PayerMrfBatchReader(DataSourceReader):
     """Batch mode: full manifest -> one partition per chunk.
 
@@ -333,20 +279,6 @@ class PayerMrfBatchReader(DataSourceReader):
     def partitions(self):
         opts = self._opts
         hk = opts.header_key  # None = no constraint
-        if opts.manifest_file:
-            rows = _load_manifest_rows(opts.manifest_file)
-            return [
-                _ChunkPartition(
-                    r["path"],
-                    r["start"],
-                    r["end"],
-                    r["header_key"],
-                    opts.payload_as_array,
-                    opts.include_offsets,
-                )
-                for r in rows
-                if hk is None or r["header_key"] == hk
-            ]
         paths = mrf_io.resolve_input_paths(opts.path, opts.decompress_dir)
 
         def scan_one(path: str):
@@ -576,76 +508,6 @@ def register(spark) -> None:
 # ---------------------------------------------------------------------------
 
 
-# A corpus of this many files or more gets its chunk discovery run as a
-# Spark job instead of <=8 driver threads: at 100 TB ("thousands of
-# multi-GB files") driver-side scanning caps at ~8x single-file rate while
-# executors sit idle — one scan task per file removes that ceiling.
-DISTRIBUTED_DISCOVERY_MIN_FILES = 16
-
-
-def build_manifest_distributed(
-    spark,
-    paths: list[str],
-    manifest_path: str,
-    chunk_target: int = ck.DEFAULT_CHUNK_TARGET,
-    buffersize: int = ck.DEFAULT_READ_SIZE,
-) -> str:
-    """Run chunk discovery as a Spark job — one task per file — and write
-    the manifest as a DIRECTORY of JSONL shards at ``manifest_path``,
-    straight from the executors (``df.write.json``).
-
-    The scanner (sources/chunker.py) already runs on executors for the
-    read path; here it runs there for DISCOVERY too, so a many-file corpus
-    scans at cluster rate instead of the driver's thread ceiling (the
-    reference's discovery is driver-side single-file,
-    JsonMRFSource.scala:138-178 — this is the repo's 100 TB extension).
-    Manifest rows are ~100 bytes per ~chunktargetbytes of data (a 100 TB
-    corpus at 8 MB chunks is ~1 GB of manifest); each scan task writes its
-    own shard, so manifest bytes never pass through the driver and there
-    is no driver-memory ceiling on corpus size. On a cluster point
-    ``manifest_path`` at shared storage (HDFS/S3) so the planner can read
-    the shards back; the Hadoop committer's ``_SUCCESS`` marker makes the
-    write atomic-enough for the cache-reuse check in ``read_payer_mrf``.
-    """
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    sc = spark.sparkContext
-
-    def scan_file(path):
-        # parallelism here comes from one-task-per-file: every core is
-        # already scanning a different file, so the scanner's per-file
-        # read-ahead/classify threads would only oversubscribe the
-        # executor (32 tasks x 5 threads). Passed as an explicit arg —
-        # NOT via os.environ, which in local mode would permanently
-        # disable the prefetch pipeline for every later direct scan in
-        # the same (driver==executor) process.
-        return [
-            (path, c.start, c.end, c.header_key)
-            for c in ck.scan_chunks(
-                path, chunk_target, buffersize, prefetch=False
-            )
-        ]
-
-    schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("start", LongType()),
-            StructField("end", LongType()),
-            StructField("header_key", StringType()),
-        ]
-    )
-    rdd = sc.parallelize(paths, len(paths)).flatMap(scan_file)
-    spark.createDataFrame(rdd, schema).write.mode("overwrite").json(
-        manifest_path
-    )
-    return manifest_path
-
-
 # Reader-plan cache, the read_payer_mrf twin of operators.suite.load's:
 # constructing a Python DataSource reader costs a DataFrameReader py4j
 # round trip plus the datasource's schema/plan handshake on every call —
@@ -679,56 +541,13 @@ def _reader_cache_key(path: str, opt_l: dict):
 def read_payer_mrf(spark, path: str, **options):
     """Batch-read MRF file(s) into the 3-column bronze DataFrame.
 
-    When ``path`` resolves to ``DISTRIBUTED_DISCOVERY_MIN_FILES`` or more
-    files (directory / glob corpora), chunk discovery automatically runs
-    as a Spark job (``build_manifest_distributed``) and the planner reads
-    the resulting manifest instead of re-scanning driver-side. Override
-    with ``distributeddiscovery="true"``/``"false"``; an explicit
-    ``manifestfile=`` option always wins.
+    Chunk discovery runs on the driver when Spark plans the read
+    (``PayerMrfBatchReader.partitions``): one scan per input file, up to 8
+    files at a time, each manifest cached by file stat. The DataFrame
+    itself is cached per (session, path, options, input stat signature).
     """
     register(spark)
     opt_l = {str(k).lower(): v for k, v in options.items()}
-    dd = str(opt_l.pop("distributeddiscovery", "auto")).lower()
-    if "manifestfile" not in opt_l and dd != "false":
-        paths = mrf_io.resolve_input_paths(
-            path, opt_l.get("decompressdir")
-        )
-        if dd == "true" or len(paths) >= DISTRIBUTED_DISCOVERY_MIN_FILES:
-            import hashlib
-            import tempfile
-
-            chunk_target = int(
-                opt_l.get("chunktargetbytes", ck.DEFAULT_CHUNK_TARGET)
-            )
-            buffersize = int(opt_l.get("buffersize", ck.DEFAULT_READ_SIZE))
-            try:
-                # the cache key needs local stat(); remote corpora should
-                # pass manifestfile= (or distributeddiscovery=false) and
-                # manage manifest placement on their own storage
-                sig = hashlib.md5(
-                    repr(
-                        [
-                            (p, os.stat(p).st_size, os.stat(p).st_mtime_ns)
-                            for p in paths
-                        ]
-                        + [chunk_target, buffersize]
-                    ).encode()
-                ).hexdigest()[:16]
-            except OSError:
-                sig = None
-            if sig is not None:
-                mdir = os.path.join(
-                    tempfile.gettempdir(), "payer_mrf_manifests"
-                )
-                os.makedirs(mdir, exist_ok=True)
-                mpath = os.path.join(mdir, f"manifest_{sig}")
-                # sig covers file content; _SUCCESS guards against a
-                # half-written shard dir from an interrupted earlier job
-                if not os.path.exists(os.path.join(mpath, "_SUCCESS")):
-                    build_manifest_distributed(
-                        spark, paths, mpath, chunk_target, buffersize
-                    )
-                opt_l["manifestfile"] = mpath
 
     def load():
         reader = spark.read.format(FORMAT_NAME)

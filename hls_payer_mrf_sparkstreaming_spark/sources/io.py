@@ -25,11 +25,6 @@ def _strip_file_scheme(path: str) -> str:
     return path
 
 
-def is_remote(path: str) -> bool:
-    p = _strip_file_scheme(path)
-    return "://" in p
-
-
 def open_input(path: str) -> BinaryIO:
     """Open a seekable binary reader for a local or remote path."""
     p = _strip_file_scheme(path)
@@ -146,19 +141,9 @@ def resolve_input_paths(
                 raise ValueError(
                     f"payer-mrf: no .json/.json.gz files in {path}"
                 )
-            # same gz-sibling dedupe as the local branch
-            listed_set = set(cands)
-            cands = [
-                c
-                for c in cands
-                if not (c.endswith(".json") and c + ".gz" in listed_set)
-            ]
-            resolved = [
-                resolve_input_path(c, decompress_dir) for c in cands
-            ]
-            return list(dict.fromkeys(resolved))
-        return [resolve_input_path(p, decompress_dir)]
-    if os.path.isdir(p):
+        else:
+            cands = [p]
+    elif os.path.isdir(p):
         cands = sorted(
             q
             for q in _glob.glob(os.path.join(p, "*"))

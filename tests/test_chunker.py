@@ -271,7 +271,18 @@ if _HAVE_HYPOTHESIS:
         check_roundtrip(raw, chunk_target=chunk_target, read_size=read_size)
 
 
-def test_prefetch_pipeline_identical_to_inline(tmp_path, monkeypatch):
+def _scan(path, prefetch):
+    """Scan ``path`` at the smallest read size that can prefetch, with the
+    read-ahead pipeline explicitly on or off."""
+    from hls_payer_mrf_sparkstreaming_spark.sources import chunker
+
+    with open(path, "rb") as f:
+        yield from ChunkScanner(
+            f, read_size=chunker._PREFETCH_MIN_READ, prefetch=prefetch
+        ).scan()
+
+
+def test_prefetch_pipeline_identical_to_inline(tmp_path):
     """The read-ahead pipeline (threaded stage-A classification of
     read_size blocks) must produce byte-identical manifests to the
     synchronous path — block classifications concatenate exactly, by
@@ -281,29 +292,22 @@ def test_prefetch_pipeline_identical_to_inline(tmp_path, monkeypatch):
     p = str(tmp_path / "m.json")
     write_mrf_file(p, n_in_network=4000, n_provider_refs=300, seed=11)
     assert os.path.getsize(p) > 3 * chunker._PREFETCH_MIN_READ
-    monkeypatch.setenv(chunker._PREFETCH_ENV, "0")
-    inline = list(chunker.scan_chunks(p, read_size=chunker._PREFETCH_MIN_READ))
-    monkeypatch.setenv(chunker._PREFETCH_ENV, "1")
-    threaded = list(
-        chunker.scan_chunks(p, read_size=chunker._PREFETCH_MIN_READ)
-    )
+    inline = list(_scan(p, prefetch=False))
+    threaded = list(_scan(p, prefetch=True))
     assert threaded == inline
     assert len(threaded) > 1
 
 
-def test_prefetch_abandoned_scan_retires_thread(tmp_path, monkeypatch):
+def test_prefetch_abandoned_scan_retires_thread(tmp_path):
     """Dropping a scan generator mid-pull must not park the prefetch
     thread forever (the weakref finalizer stops it)."""
     import gc
     import threading
     import time as _time
 
-    from hls_payer_mrf_sparkstreaming_spark.sources import chunker
-
     p = str(tmp_path / "m.json")
     write_mrf_file(p, n_in_network=4000, n_provider_refs=300, seed=12)
-    monkeypatch.setenv(chunker._PREFETCH_ENV, "1")
-    g = chunker.scan_chunks(p, read_size=chunker._PREFETCH_MIN_READ)
+    g = _scan(p, prefetch=True)
     next(g)  # start the scan (and the prefetcher)
     g.close()
     del g
@@ -377,7 +381,7 @@ def test_prefetch_pool_failure_cannot_hang_consumer(tmp_path, monkeypatch):
 
     def run():
         try:
-            list(chunker.scan_chunks(p, read_size=chunker._PREFETCH_MIN_READ))
+            list(_scan(p, prefetch=True))
             result.append(("ok", None))
         except Exception as exc:  # noqa: BLE001 — recording for the assert
             result.append(("err", exc))
@@ -390,7 +394,7 @@ def test_prefetch_pool_failure_cannot_hang_consumer(tmp_path, monkeypatch):
     assert kind == "err" and "can't start new thread" in str(exc)
 
 
-def test_prefetch_concurrent_scans_share_classify_pool(tmp_path, monkeypatch):
+def test_prefetch_concurrent_scans_share_classify_pool(tmp_path):
     """Two scans running concurrently in one process (the executor-side
     Python worker situation) must share ONE classify pool and still each
     produce the exact synchronous manifest."""
@@ -403,20 +407,11 @@ def test_prefetch_concurrent_scans_share_classify_pool(tmp_path, monkeypatch):
         p = str(tmp_path / f"m{i}.json")
         write_mrf_file(p, n_in_network=4000, n_provider_refs=300, seed=i)
         paths.append(p)
-    expected = [
-        list(chunker.scan_chunks(p, read_size=chunker._PREFETCH_MIN_READ,
-                                 prefetch=False))
-        for p in paths
-    ]
-    monkeypatch.setenv(chunker._PREFETCH_ENV, "1")
+    expected = [list(_scan(p, prefetch=False)) for p in paths]
     results: dict[int, list] = {}
 
     def run(i):
-        results[i] = list(
-            chunker.scan_chunks(
-                paths[i], read_size=chunker._PREFETCH_MIN_READ
-            )
-        )
+        results[i] = list(_scan(paths[i], prefetch=True))
 
     threads = [threading.Thread(target=run, args=(i,)) for i in range(2)]
     for t in threads:
@@ -427,19 +422,3 @@ def test_prefetch_concurrent_scans_share_classify_pool(tmp_path, monkeypatch):
     assert results[1] == expected[1]
     # creation is idempotent: the module-level pool object is shared
     assert chunker._classify_pool() is chunker._classify_pool()
-
-
-def test_scan_chunks_prefetch_arg_does_not_touch_env(tmp_path):
-    """prefetch=False is an explicit argument, not an os.environ mutation:
-    a distributed-discovery scan in a local-mode process must not disable
-    the pipeline for later scans in the same process (advice r9)."""
-    import os as _os
-
-    from hls_payer_mrf_sparkstreaming_spark.sources import chunker
-
-    p = str(tmp_path / "m.json")
-    write_mrf_file(p, n_in_network=500, n_provider_refs=50, seed=17)
-    before = _os.environ.get(chunker._PREFETCH_ENV)
-    sync = list(chunker.scan_chunks(p, prefetch=False))
-    assert _os.environ.get(chunker._PREFETCH_ENV) == before
-    assert list(chunker.scan_chunks(p)) == sync

@@ -419,85 +419,37 @@ def test_checkpoint_restart_exactly_once(spark, mrf_file, tmp_path):
 
 
 def test_distributed_discovery_many_files(spark, tmp_path):
-    """>= DISTRIBUTED_DISCOVERY_MIN_FILES inputs: discovery runs as a Spark
-    job (one scan task per file) writing a manifest the planner reads,
-    instead of <=8 driver threads — and the rows are identical to the
-    driver-side path."""
-    from hls_payer_mrf_sparkstreaming_spark.sources import datasource as ds
+    """A 16-file directory read plans exactly the chunks of the 16
+    single-file reads: driver-side discovery over a thread pool loses,
+    duplicates or misattributes no chunk. A leftover
+    ``distributeddiscovery`` option is ignored like any unknown option."""
     from hls_payer_mrf_sparkstreaming_spark.sources.synth import (
         write_mrf_file,
     )
 
     d = tmp_path / "many"
     d.mkdir()
-    n_files = ds.DISTRIBUTED_DISCOVERY_MIN_FILES
-    for i in range(n_files):
-        write_mrf_file(str(d / f"payer_{i:02d}.json"), n_in_network=8, seed=i)
+    n_files = 16
+    files = [str(d / f"payer_{i:02d}.json") for i in range(n_files)]
+    for i, f in enumerate(files):
+        write_mrf_file(f, n_in_network=8, seed=i)
 
     opts = dict(chunktargetbytes=4096, includeoffsets="true")
-    dist = read_payer_mrf(spark, str(d), **opts)
-    driver_side = read_payer_mrf(
+    key = ["file_name", "header_key", "chunk_start"]
+
+    def keys(df):
+        return {tuple(r) for r in df.select(*key).collect()}
+
+    corpus = keys(read_payer_mrf(spark, str(d), **opts))
+    singles = set().union(
+        *(keys(read_payer_mrf(spark, f, **opts)) for f in files)
+    )
+    assert corpus == singles and len(corpus) > n_files
+    assert {r[0] for r in corpus} == set(files)
+    legacy = read_payer_mrf(
         spark, str(d), distributeddiscovery="false", **opts
     )
-    key = ["file_name", "header_key", "chunk_start"]
-    a = {tuple(r) for r in dist.select(*key).collect()}
-    b = {tuple(r) for r in driver_side.select(*key).collect()}
-    assert a == b and len(a) > n_files
-    # all files' chunks present
-    assert dist.select("file_name").distinct().count() == n_files
-
-    # the Spark-job path wrote a manifest shard DIR (executor-side write —
-    # no manifest bytes pass through the driver) covering every chunk
-    import glob as _glob
-    import tempfile
-
-    manifests = _glob.glob(
-        os.path.join(
-            tempfile.gettempdir(), "payer_mrf_manifests", "manifest_*"
-        )
-    )
-    rows = []
-    for m in manifests:
-        if not os.path.isdir(m):
-            continue
-        assert os.path.exists(os.path.join(m, "_SUCCESS"))
-        for part in os.listdir(m):
-            if part.startswith(("_", ".")):
-                continue
-            with open(os.path.join(m, part)) as f:
-                rows.extend(json.loads(line) for line in f if line.strip())
-    covered = {
-        (r["path"], r["header_key"], r["start"])
-        for r in rows
-        if r["path"].startswith(str(d))
-    }
-    assert {(r[0], r[1], r[2]) for r in a} == covered
-
-
-def test_distributed_discovery_forced_on_two_files(spark, tmp_path):
-    from hls_payer_mrf_sparkstreaming_spark.sources.synth import (
-        write_mrf_file,
-    )
-
-    d = tmp_path / "two"
-    d.mkdir()
-    write_mrf_file(str(d / "a.json"), n_in_network=10, seed=1)
-    write_mrf_file(str(d / "b.json"), n_in_network=12, seed=2)
-    forced = read_payer_mrf(
-        spark, str(d), distributeddiscovery="true", chunktargetbytes=4096
-    )
-    plain = read_payer_mrf(
-        spark, str(d), distributeddiscovery="false", chunktargetbytes=4096
-    )
-    a = {
-        (r["file_name"], r["header_key"], r["json_payload"])
-        for r in forced.collect()
-    }
-    b = {
-        (r["file_name"], r["header_key"], r["json_payload"])
-        for r in plain.collect()
-    }
-    assert a == b
+    assert keys(legacy) == corpus
 
 
 def test_checkpoint_restart_exactly_once_multifile(spark, tmp_path):
@@ -548,9 +500,7 @@ def test_checkpoint_restart_exactly_once_multifile(spark, tmp_path):
     # arrives while the stream is down AND sorts before both existing files
     write_mrf_file(str(d / "a_late.json"), n_in_network=40, seed=13)
 
-    expected = read_payer_mrf(
-        spark, str(d), distributeddiscovery="false", **opts
-    )
+    expected = read_payer_mrf(spark, str(d), **opts)
     n_total = expected.count()
     assert 0 < n_partial < n_total
 
@@ -717,26 +667,3 @@ def test_remote_directory_listing_resolves_mixed_corpus(
         [f"mock://{d}/a.json", f"mock://{d}/b.json", str(dec / "c.json")]
     )
     assert os.path.exists(dec / "c.json")
-
-
-def test_remote_manifest_dir_listing(tmp_path, monkeypatch):
-    import pyarrow.fs as pafs
-
-    from hls_payer_mrf_sparkstreaming_spark.sources import (
-        datasource as ds,
-    )
-
-    monkeypatch.setattr(pafs, "FileSystem", _FakeRemoteFS)
-    d = tmp_path / "manifest_x"
-    d.mkdir()
-    (d / "part-0.json").write_text(
-        '{"path": "/a.json", "start": 0, "end": 9, "header_key": ""}\n'
-    )
-    (d / "part-1.json").write_text(
-        '{"path": "/a.json", "start": 9, "end": 20,'
-        ' "header_key": "in_network"}\n'
-    )
-    (d / "_SUCCESS").write_text("")
-    rows = ds._load_manifest_rows(f"mock://{d}")
-    assert len(rows) == 2
-    assert {r["header_key"] for r in rows} == {"", "in_network"}

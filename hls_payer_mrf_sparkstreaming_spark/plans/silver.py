@@ -13,7 +13,10 @@ functions:
   retries/restarts: at 100 TB a task retry with uuid() keys silently
   orphans child rows, xxhash keys cannot;
 - the provider-references x payer cross join (01_payer_mrf_demo.py:157-158)
-  is an explicit ``crossJoin`` against a 1-row broadcast dimension.
+  is an explicit ``crossJoin`` against a 1-row broadcast dimension;
+- the demo's one fixed CTAS recipe becomes one ``SilverSpec`` per CMS file
+  type (IN_NETWORK, ALLOWED_AMOUNTS, TOC), which one builder, one staged
+  saver and the foreachBatch stream (streaming/silver_stream.py) all walk.
 
 Scale notes: every transform here is a narrow projection/generate over the
 bronze rows — the only shuffles in the whole pipeline are the gold query's
@@ -24,6 +27,9 @@ a partition; partition sizing is controlled upstream by the source's
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -81,22 +87,23 @@ def _parse_top_level_array(
     (file_name, chunk identity, item position within the chunk) instead —
     unique per item and deterministic across task retries (the reference's
     uuid() keys, 01_payer_mrf_demo.py:165, are neither). Chunk identity is
-    ``chunk_start`` (byte offset; present when the source ran with
-    ``includeoffsets=true`` — every build_*_silver sets it), falling back
-    to a hash of the chunk payload for raw 3-column bronzes.
+    ``chunk_start``, the byte offset the source adds with
+    ``includeoffsets=true`` (``silver_source_options`` sets it). A bronze
+    without it is rejected: a hash of the chunk payload would give two
+    byte-identical chunks the same keys and cross-link their prices.
     """
     from pyspark.sql.types import ArrayType
 
-    chunk_id = (
-        F.col("chunk_start")
-        if "chunk_start" in bronze.columns
-        else F.xxhash64("json_payload")
-    )
+    if "chunk_start" not in bronze.columns:
+        raise ValueError(
+            "silver needs chunk byte offsets: read the bronze with the "
+            "payer-mrf source option includeoffsets=true"
+        )
     return (
         bronze.filter(F.col("header_key") == header_key)
         .select(
             "file_name",
-            chunk_id.alias("_chunk_id"),
+            F.col("chunk_start").alias("_chunk_id"),
             F.posexplode(
                 F.from_json("json_payload", ArrayType(item_schema))
             ).alias("_item_pos", "n"),
@@ -292,105 +299,6 @@ def shoppable_price(
 
 
 # ---------------------------------------------------------------------------
-# one-call pipeline
-# ---------------------------------------------------------------------------
-
-
-class MrfSilverTables:
-    """All silver tables derived from one bronze DataFrame.
-
-    ``bronze_header``/``bronze_pr``/``bronze_in`` optionally supply
-    per-branch pruned bronzes (source ``headerkey`` option): each branch's
-    scan then plans only its own byte ranges, so the provider_references
-    branch never reads in_network bytes and vice versa — the IO win the
-    row-level header_key filter alone cannot give a Python data source.
-    """
-
-    def __init__(
-        self,
-        bronze: DataFrame,
-        bronze_header: DataFrame | None = None,
-        bronze_pr: DataFrame | None = None,
-        bronze_in: DataFrame | None = None,
-    ):
-        self.bronze = bronze
-        self.header = parse_header(
-            bronze_header if bronze_header is not None else bronze
-        )
-        self.provider_references = parse_provider_references(
-            bronze_pr if bronze_pr is not None else bronze
-        )
-        self.in_network = parse_in_network(
-            bronze_in if bronze_in is not None else bronze
-        )
-        self.codes = in_network_codes(self.in_network)
-        self.rates = in_network_rates(self.codes)
-        self.prices = in_network_prices(self.rates)
-        self.par_providers = in_network_par_providers(self.rates)
-        self.providers_x_payer = provider_references_x_payer(
-            self.provider_references, self.header
-        )
-
-    def shoppable_price(self, billing_code: str, tin_value: str) -> DataFrame:
-        return shoppable_price(
-            self.codes,
-            self.providers_x_payer,
-            billing_code,
-            tin_value,
-        )
-
-    def save_all(self, spark: SparkSession, database: str) -> None:
-        """CTAS equivalents (01_payer_mrf_demo.py:148-213), staged: each
-        in_network tier derives from the PREVIOUSLY WRITTEN table, not from
-        bronze lineage — otherwise codes/rates/prices/par_providers would
-        each re-read and re-parse the in_network JSON branch (4x the
-        ingest cost; measured 1.7 GB/min vs 3x that staged on a 2.2 GB
-        corpus). Reading back the just-written parquet is the medallion
-        pattern that holds at 100 TB, where persist() of the parsed branch
-        would not fit and lineage recompute is prohibitive."""
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-
-        def save(name: str, df: DataFrame) -> DataFrame:
-            df.write.mode("overwrite").saveAsTable(f"{database}.{name}")
-            return spark.table(f"{database}.{name}")
-
-        save("provider_header", self.header)
-        save("provider_references_x_payer", self.providers_x_payer)
-        codes = save("in_network_codes", self.codes)
-        rates = save("in_network_rates", in_network_rates(codes))
-        save("in_network_prices", in_network_prices(rates))
-        save("in_network_par_providers", in_network_par_providers(rates))
-
-
-def build_silver(spark: SparkSession, path: str, **options) -> MrfSilverTables:
-    """Read an MRF file and derive the full silver star model.
-
-    Each branch gets its own byte-range-pruned bronze (``headerkey``
-    option), so e.g. the gold query's in_network scans never read
-    provider_references bytes. ``includeoffsets`` is forced on so
-    in_network surrogate keys hash the chunk byte offset (per-row unique,
-    retry-stable)."""
-    options = dict(options)
-    if "includeoffsets" not in {k.lower() for k in options}:
-        options["includeoffsets"] = "true"
-    if "headerkey" in {k.lower() for k in options}:
-        return MrfSilverTables(read_payer_mrf(spark, path, **options))
-
-    def branch(hk: str | None) -> DataFrame:
-        o = dict(options)
-        if hk is not None:
-            o["headerkey"] = hk
-        return read_payer_mrf(spark, path, **o)
-
-    return MrfSilverTables(
-        branch(None),
-        bronze_header=branch(""),
-        bronze_pr=branch(HEADER_KEY_PROVIDER_REFERENCES),
-        bronze_in=branch(HEADER_KEY_IN_NETWORK),
-    )
-
-
-# ---------------------------------------------------------------------------
 # allowed-amounts (out-of-network) silver — the second CMS
 # Transparency-in-Coverage file type. The reference repo stops at
 # in-network-rates files, but its splitter (and this engine's) is agnostic
@@ -452,65 +360,6 @@ def out_of_network_payments(items: DataFrame) -> DataFrame:
             F.col("prov.billed_charge").alias("billed_charge"),
             F.col("prov.npi").alias("npi"),
         )
-    )
-
-
-class OonSilverTables:
-    """Silver tables derived from one allowed-amounts bronze."""
-
-    def __init__(self, bronze: DataFrame, bronze_header=None, bronze_oon=None):
-        self.bronze = bronze
-        self.header = parse_header(
-            bronze_header if bronze_header is not None else bronze
-        )
-        self.out_of_network = parse_out_of_network(
-            bronze_oon if bronze_oon is not None else bronze
-        )
-        self.payments = out_of_network_payments(self.out_of_network)
-
-
-def build_oon_silver(
-    spark: SparkSession, path: str, **options
-) -> OonSilverTables:
-    """Read a CMS allowed-amounts file through the payer-mrf source and
-    derive the out-of-network silver tables (byte-range-pruned branches,
-    same discipline as build_silver)."""
-    options = dict(options)
-    if "includeoffsets" not in {k.lower() for k in options}:
-        options["includeoffsets"] = "true"
-    if "headerkey" in {k.lower() for k in options}:
-        return OonSilverTables(read_payer_mrf(spark, path, **options))
-
-    def branch(hk: str | None) -> DataFrame:
-        o = dict(options)
-        if hk is not None:
-            o["headerkey"] = hk
-        return read_payer_mrf(spark, path, **o)
-
-    return OonSilverTables(
-        branch(None),
-        bronze_header=branch(""),
-        bronze_oon=branch(HEADER_KEY_OUT_OF_NETWORK),
-    )
-
-
-def save_oon_all(
-    tables: OonSilverTables, spark: SparkSession, database: str
-) -> None:
-    """CTAS the allowed-amounts silver tables, staged like
-    MrfSilverTables.save_all: payments derives from the just-written
-    out_of_network table, not from bronze lineage, so the JSON branch is
-    parsed exactly once per medallion build."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    tables.header.write.mode("overwrite").saveAsTable(
-        f"{database}.oon_header"
-    )
-    tables.out_of_network.write.mode("overwrite").saveAsTable(
-        f"{database}.out_of_network_items"
-    )
-    items = spark.table(f"{database}.out_of_network_items")
-    out_of_network_payments(items).write.mode("overwrite").saveAsTable(
-        f"{database}.out_of_network_payments"
     )
 
 
@@ -585,31 +434,201 @@ def toc_file_manifest(structures: DataFrame) -> DataFrame:
     )
 
 
-class TocSilverTables:
-    """Silver tables derived from one table-of-contents bronze."""
+# ---------------------------------------------------------------------------
+# one silver spec per CMS file type (01_payer_mrf_demo.py:148-213), walked
+# by one bronze reader (_read_bronze), one staging loop (SilverSpec.stage:
+# SilverTables, save_all and the foreachBatch stream) and read_silver
+# ---------------------------------------------------------------------------
 
-    def __init__(self, bronze: DataFrame, bronze_rs=None):
-        self.bronze = bronze
-        self.structures = parse_reporting_structure(
-            bronze_rs if bronze_rs is not None else bronze
+
+@dataclass(frozen=True)
+class SilverSpec:
+    """One CMS file type's silver recipe.
+
+    ``branches``: attr -> (header_key, parse fn over a bronze); the
+    builder reads one headerkey-pruned bronze per branch. ``derived``:
+    attr -> (fn, input attrs), in dependency order. ``tables``: attr ->
+    batch table name of each node ``save_all`` writes. ``stores``: the
+    nodes the foreachBatch stream writes."""
+
+    branches: dict[str, tuple[str, Callable[[DataFrame], DataFrame]]]
+    derived: dict[str, tuple[Callable[..., DataFrame], tuple[str, ...]]]
+    tables: dict[str, str] = field(default_factory=dict)
+    stores: tuple[str, ...] = ()
+
+    def stage(self, bronze, save=None, names=()) -> dict[str, DataFrame]:
+        """Every node over ``bronze`` (one bronze for every branch, or
+        branch attr -> its own headerkey-pruned bronze), in spec order.
+        Each node in ``names`` is passed to ``save(name, df)``, and later
+        tiers read the frame ``save`` returns instead of the bronze
+        lineage."""
+        frames = {}
+        for name, (_, parse) in self.branches.items():
+            df = parse(bronze[name] if isinstance(bronze, dict) else bronze)
+            frames[name] = save(name, df) if name in names else df
+        return self.derive(frames, save, names)
+
+    def derive(self, frames: dict, save=None, names=()) -> dict:
+        """Add to ``frames`` each derived node it lacks but holds the
+        inputs of, in spec order. A node in ``names`` is passed to
+        ``save(name, df)``, and later nodes read the frame it returns."""
+        for name, (fn, inputs) in self.derived.items():
+            if name not in frames and all(i in frames for i in inputs):
+                df = fn(*(frames[i] for i in inputs))
+                frames[name] = save(name, df) if name in names else df
+        return frames
+
+
+IN_NETWORK = SilverSpec(
+    branches={
+        "header": ("", parse_header),
+        "provider_references": (
+            HEADER_KEY_PROVIDER_REFERENCES,
+            parse_provider_references,
+        ),
+        "in_network": (HEADER_KEY_IN_NETWORK, parse_in_network),
+    },
+    derived={
+        "providers_x_payer": (
+            provider_references_x_payer,
+            ("provider_references", "header"),
+        ),
+        "codes": (in_network_codes, ("in_network",)),
+        "rates": (in_network_rates, ("codes",)),
+        "prices": (in_network_prices, ("rates",)),
+        "par_providers": (in_network_par_providers, ("rates",)),
+    },
+    tables={
+        "header": "provider_header",
+        "providers_x_payer": "provider_references_x_payer",
+        "codes": "in_network_codes",
+        "rates": "in_network_rates",
+        "prices": "in_network_prices",
+        "par_providers": "in_network_par_providers",
+    },
+    # the stream stores only nodes whose every row derives from ONE
+    # bronze chunk. providers_x_payer crosses provider_references with the
+    # header's reporting entity — header and provider_references chunks
+    # land in DIFFERENT micro-batches under pipelined discovery, so that
+    # join must happen at read time over the accumulated stores, never
+    # per batch.
+    stores=("header", "provider_references", "codes", "prices",
+            "par_providers"),
+)
+
+ALLOWED_AMOUNTS = SilverSpec(
+    branches={
+        "header": ("", parse_header),
+        "out_of_network": (HEADER_KEY_OUT_OF_NETWORK, parse_out_of_network),
+    },
+    derived={"payments": (out_of_network_payments, ("out_of_network",))},
+    tables={
+        "header": "oon_header",
+        "out_of_network": "out_of_network_items",
+        "payments": "out_of_network_payments",
+    },
+)
+
+TOC = SilverSpec(
+    branches={
+        "structures": (
+            HEADER_KEY_REPORTING_STRUCTURE,
+            parse_reporting_structure,
+        ),
+    },
+    derived={"file_manifest": (toc_file_manifest, ("structures",))},
+)
+
+
+class SilverTables:
+    """The silver frames of one bronze (see ``SilverSpec.stage``), one
+    attribute per spec node."""
+
+    def __init__(self, spec: SilverSpec, bronze):
+        self.spec, self._bronze = spec, bronze
+        vars(self).update(spec.stage(bronze))
+
+    def save_all(self, spark: SparkSession, database: str) -> None:
+        """CTAS equivalents of the spec's tables, staged: each tier
+        derives from the PREVIOUSLY WRITTEN table, not from bronze lineage
+        — otherwise codes/rates/prices/par_providers would each re-read
+        and re-parse the in_network JSON branch (4x the ingest cost;
+        measured 1.7 GB/min vs 3x that staged on a 2.2 GB corpus). Reading
+        back the just-written table is the medallion pattern that holds
+        at 100 TB, where persist() of the parsed branch would not fit and
+        lineage recompute is prohibitive."""
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
+
+        def save(name: str, df: DataFrame) -> DataFrame:
+            table = f"{database}.{self.spec.tables[name]}"
+            df.write.mode("overwrite").saveAsTable(table)
+            return spark.table(table)
+
+        self.spec.stage(self._bronze, save, self.spec.tables)
+
+
+class MrfSilverTables(SilverTables):
+    """The in-network silver tables of one bronze, plus the gold query."""
+
+    def __init__(self, bronze):
+        super().__init__(IN_NETWORK, bronze)
+
+    def shoppable_price(self, billing_code: str, tin_value: str) -> DataFrame:
+        return shoppable_price(
+            self.codes,
+            self.providers_x_payer,
+            billing_code,
+            tin_value,
         )
-        self.file_manifest = toc_file_manifest(self.structures)
+
+
+def silver_source_options(options: dict) -> dict:
+    """``options`` with ``includeoffsets`` on unless the caller set it:
+    surrogate keys hash the chunk byte offset (per-row unique,
+    retry-stable), so a batch build and a stream over the same file
+    derive the same keys."""
+    options = dict(options)
+    if "includeoffsets" not in {k.lower() for k in options}:
+        options["includeoffsets"] = "true"
+    return options
+
+
+def _read_bronze(spark: SparkSession, path: str, spec: SilverSpec, options):
+    """The bronze of each of ``spec``'s branches: one headerkey-pruned read
+    per branch, so each branch's scan plans only its own byte ranges (the
+    IO win the row-level header_key filter alone cannot give a Python data
+    source); or the one read the caller pruned with ``headerkey``."""
+    options = silver_source_options(options)
+    if "headerkey" in {k.lower() for k in options}:
+        return read_payer_mrf(spark, path, **options)
+    return {
+        name: read_payer_mrf(spark, path, **options, headerkey=hk)
+        for name, (hk, _) in spec.branches.items()
+    }
+
+
+def build_silver(spark: SparkSession, path: str, **options) -> MrfSilverTables:
+    """Read an in-network rates file and derive the full silver star model
+    (byte-range-pruned branches, so e.g. the gold query's in_network scans
+    never read provider_references bytes)."""
+    return MrfSilverTables(_read_bronze(spark, path, IN_NETWORK, options))
+
+
+def build_oon_silver(
+    spark: SparkSession, path: str, **options
+) -> SilverTables:
+    """Allowed-amounts silver: header, out_of_network items, payments."""
+    return SilverTables(
+        ALLOWED_AMOUNTS, _read_bronze(spark, path, ALLOWED_AMOUNTS, options)
+    )
 
 
 def build_toc_silver(
     spark: SparkSession, path: str, **options
-) -> TocSilverTables:
-    options = dict(options)
-    if "includeoffsets" not in {k.lower() for k in options}:
-        options["includeoffsets"] = "true"
-    if "headerkey" in {k.lower() for k in options}:
-        return TocSilverTables(read_payer_mrf(spark, path, **options))
-    o = dict(options)
-    o["headerkey"] = HEADER_KEY_REPORTING_STRUCTURE
-    return TocSilverTables(
-        read_payer_mrf(spark, path, **options),
-        bronze_rs=read_payer_mrf(spark, path, **o),
-    )
+) -> SilverTables:
+    """Table-of-contents silver: structures and the (plan x file)
+    manifest."""
+    return SilverTables(TOC, _read_bronze(spark, path, TOC, options))
 
 
 # ---------------------------------------------------------------------------

@@ -1,10 +1,11 @@
 """Continuous bronze -> silver ETL: transform INSIDE the stream with
 foreachBatch instead of landing bronze first.
 
-Each micro-batch of bronze chunks is parsed straight into the five
-chunk-local silver stores (codes, prices, par_providers,
-provider_references, header) and written to parquet; ``read_silver``
-derives the four silver child tables from them. This is correct
+Each micro-batch of bronze chunks is staged through the in-network silver
+spec (plans/silver.py ``IN_NETWORK``) into its five chunk-local stores
+(header, provider_references, codes, prices, par_providers), written to
+parquet; ``read_silver`` derives the unstored nodes from them through the
+same spec. This is correct
 incrementally because every stored row derives from exactly ONE bronze
 chunk and the surrogate keys are content+offset hashes (plans/silver.py) —
 batch boundaries can't split or duplicate a row, and discovery order
@@ -30,14 +31,6 @@ from hls_payer_mrf_sparkstreaming_spark.streaming import batch_dir
 
 SILVER_TABLES = ("codes", "prices", "par_providers", "providers_x_payer")
 
-# what foreachBatch writes: only tables whose every row derives from ONE
-# bronze chunk. providers_x_payer crosses provider_references with the
-# header's reporting entity — header and provider_references chunks land
-# in DIFFERENT micro-batches under pipelined discovery, so that join must
-# happen at read time over the accumulated stores, never per batch.
-_CHUNK_LOCAL = ("codes", "prices", "par_providers", "provider_references",
-                "header")
-
 
 def stream_silver_continuous(
     spark,
@@ -59,50 +52,34 @@ def stream_silver_continuous(
     first ``latestOffset``); the caller then watches progress and stops
     the query."""
     from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
-        MrfSilverTables,
-        in_network_par_providers,
-        in_network_prices,
-        in_network_rates,
+        IN_NETWORK,
+        silver_source_options,
     )
     from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
         stream_payer_mrf,
     )
 
-    # same forcing as build_silver: surrogate keys hash the chunk byte
-    # offset, so a stream read without offsets would silently derive
-    # DIFFERENT keys than the batch pipeline over the same file
-    if "includeoffsets" not in {k.lower() for k in source_options}:
-        source_options["includeoffsets"] = "true"
-
     def write_batch(bronze: DataFrame, batch_id: int) -> None:
+        def save(name: str, df: DataFrame) -> DataFrame:
+            d = batch_dir(os.path.join(out_dir, name), checkpoint_dir,
+                          batch_id)
+            df.write.mode("overwrite").parquet(d)
+            # the frame's own schema: no inference pass over the new files
+            return df.sparkSession.read.schema(df.schema).parquet(d)
+
         # one source read feeds five writes: without the bronze cache the
-        # codes, provider_references and header writes each re-run the
-        # Python source over every chunk of the batch. codes is cached on
-        # top, as in save_all, so prices and par_providers don't re-parse
-        # the in_network JSON.
+        # header, provider_references and codes writes each re-run the
+        # Python source over every chunk of the batch. Later tiers read
+        # the store just written, as save_all reads its table, so prices
+        # and par_providers don't re-parse the in_network JSON.
         bronze = bronze.persist()
-        t = MrfSilverTables(bronze)
-        codes = t.codes.persist()
         try:
-            rates = in_network_rates(codes)
-            for name, df in (
-                ("codes", codes),
-                ("prices", in_network_prices(rates)),
-                ("par_providers", in_network_par_providers(rates)),
-                ("provider_references", t.provider_references),
-                ("header", t.header),
-            ):
-                df.write.mode("overwrite").parquet(
-                    batch_dir(
-                        os.path.join(out_dir, name), checkpoint_dir, batch_id
-                    )
-                )
+            IN_NETWORK.stage(bronze, save, IN_NETWORK.stores)
         finally:
-            codes.unpersist()
             bronze.unpersist()
 
     writer = (
-        stream_payer_mrf(spark, path, **source_options)
+        stream_payer_mrf(spark, path, **silver_source_options(source_options))
         .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
@@ -115,24 +92,18 @@ def stream_silver_continuous(
 
 def read_silver(spark, out_dir: str) -> dict[str, DataFrame]:
     """The four silver child tables from a continuous-ETL output dir,
-    without the ``batch_id`` directory column; providers_x_payer is
-    derived here from the accumulated header + provider_references stores
-    (see _CHUNK_LOCAL)."""
-    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
-        provider_references_x_payer,
-    )
+    without the ``batch_id`` directory column. providers_x_payer, which
+    the stream does not store (see ``IN_NETWORK.stores``), is derived from
+    the accumulated header + provider_references stores through the
+    in-network spec."""
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import IN_NETWORK
 
-    stored = {
-        name: spark.read.parquet(os.path.join(out_dir, name)).drop(
-            "batch_id"
-        )
-        for name in _CHUNK_LOCAL
-    }
-    return {
-        "codes": stored["codes"],
-        "prices": stored["prices"],
-        "par_providers": stored["par_providers"],
-        "providers_x_payer": provider_references_x_payer(
-            stored["provider_references"], stored["header"]
-        ),
-    }
+    frames = IN_NETWORK.derive(
+        {
+            name: spark.read.parquet(os.path.join(out_dir, name)).drop(
+                "batch_id"
+            )
+            for name in IN_NETWORK.stores
+        }
+    )
+    return {name: frames[name] for name in SILVER_TABLES}

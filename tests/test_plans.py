@@ -463,7 +463,7 @@ def test_no_unmanaged_persist_in_package():
         "dedup.py": 4,  # 3 paired build intermediates + paired CC sym
         "corpus_dedup.py": 4,  # all paired in-foreachBatch
         "corpus_gate.py": 1,  # paired via termination listener
-        "silver_stream.py": 2,  # bronze + codes, both paired in-batch
+        "silver_stream.py": 1,  # bronze only, paired in-batch
     }, counts
 
 

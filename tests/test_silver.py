@@ -187,22 +187,77 @@ def test_capitation_and_bundle_fixtures_parse(spark, cms_samples):
         assert items.filter(F.col(array_field).isNotNull()).count() >= 1
 
 
-def test_save_all_ctas_tables(spark, mrf_file, tmp_path):
-    """save_all materializes the six silver CTAS tables
-    (01_payer_mrf_demo.py:148-213); each saved table round-trips the
-    in-memory DataFrame exactly."""
-    tables = build_silver(spark, mrf_file, chunktargetbytes=8192)
-    db = "mrf_ctas_test"
+def test_identical_chunks_keep_distinct_keys(spark, tmp_path):
+    """Byte-identical chunks share a payload, so only their byte offsets
+    tell them apart: build_silver mints one surrogate key per item, and a
+    bronze read without offsets is refused rather than keyed by a payload
+    hash that collides."""
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
+        MrfSilverTables,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
+        read_payer_mrf,
+    )
+
+    item = {
+        "negotiation_arrangement": "ffs",
+        "name": "A",
+        "billing_code_type": "CPT",
+        "billing_code_type_version": "2025",
+        "billing_code": "27447",
+        "description": "same item",
+        "negotiated_rates": [],
+    }
+    p = str(tmp_path / "identical.json")
+    with open(p, "w") as f:
+        json.dump({"reporting_entity_name": "p", "in_network": [item] * 6}, f)
+    t = build_silver(spark, p, chunktargetbytes=64)
+    keys = [r["sk_in_network_id"] for r in t.codes.collect()]
+    assert len(keys) == 6 and len(set(keys)) == 6
+    with pytest.raises(ValueError, match="includeoffsets=true"):
+        MrfSilverTables(read_payer_mrf(spark, p, chunktargetbytes=64))
+
+
+_CTAS_TABLES = {
+    "in_network": {
+        "provider_header": "header",
+        "provider_references_x_payer": "providers_x_payer",
+        "in_network_codes": "codes",
+        "in_network_rates": "rates",
+        "in_network_prices": "prices",
+        "in_network_par_providers": "par_providers",
+    },
+    "allowed_amounts": {
+        "oon_header": "header",
+        "out_of_network_items": "out_of_network",
+        "out_of_network_payments": "payments",
+    },
+}
+
+
+@pytest.mark.parametrize("kind", list(_CTAS_TABLES))
+def test_save_all_ctas_tables(spark, mrf_file, tmp_path, kind):
+    """save_all materializes the file type's CTAS tables
+    (01_payer_mrf_demo.py:148-213), exactly the spec's table names; each
+    saved table round-trips the in-memory DataFrame exactly."""
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
+        build_oon_silver,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.synth import (
+        write_allowed_amounts_file,
+    )
+
+    if kind == "in_network":
+        tables = build_silver(spark, mrf_file, chunktargetbytes=8192)
+    else:
+        f = str(tmp_path / "oon.json")
+        write_allowed_amounts_file(f, n_out_of_network=25, seed=3)
+        tables = build_oon_silver(spark, f, chunktargetbytes=2048)
+    expected = _CTAS_TABLES[kind]
+    assert set(tables.spec.tables.values()) == set(expected)
+    db = f"ctas_test_{kind}"
     tables.save_all(spark, db)
     try:
-        expected = {
-            "provider_header": tables.header,
-            "provider_references_x_payer": tables.providers_x_payer,
-            "in_network_codes": tables.codes,
-            "in_network_rates": tables.rates,
-            "in_network_prices": tables.prices,
-            "in_network_par_providers": tables.par_providers,
-        }
         # listTables(db) also returns session-scoped TEMP VIEWS (e.g.
         # ones other tests registered) — keep only the db's own tables
         listed = {
@@ -211,7 +266,8 @@ def test_save_all_ctas_tables(spark, mrf_file, tmp_path):
             if not t.isTemporary
         }
         assert listed == set(expected)
-        for name, df in expected.items():
+        for name, attr in expected.items():
+            df = getattr(tables, attr)
             got = spark.table(f"{db}.{name}")
             assert sorted(got.columns) == sorted(df.columns), name
             a = sorted(map(str, got.select(*sorted(got.columns)).collect()))
@@ -340,12 +396,11 @@ def test_allowed_amounts_silver_parses_and_sums(spark, tmp_path):
 def test_allowed_amounts_streams_and_ctas(spark, tmp_path):
     """The allowed-amounts file type STREAMS through the payer-mrf source
     (availableNow -> parquet), the streamed bronze parses to the same
-    silver counts as the batch read, and save_oon_all stages the CTAS
+    silver counts as the batch read, and save_all stages the CTAS
     medallion."""
     from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
         build_oon_silver,
         parse_out_of_network,
-        save_oon_all,
     )
     from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
         stream_payer_mrf,
@@ -371,7 +426,7 @@ def test_allowed_amounts_streams_and_ctas(spark, tmp_path):
     batch = build_oon_silver(spark, f)
     assert streamed.count() == batch.out_of_network.count() == 15
 
-    save_oon_all(batch, spark, "oon_test_db")
+    batch.save_all(spark, "oon_test_db")
     try:
         pay = spark.table("oon_test_db.out_of_network_payments")
         assert pay.count() == batch.payments.count()

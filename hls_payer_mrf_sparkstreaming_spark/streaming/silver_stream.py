@@ -5,7 +5,10 @@ Each micro-batch of bronze chunks is staged through the in-network silver
 spec (plans/silver.py ``IN_NETWORK``) into its five chunk-local stores
 (header, provider_references, codes, prices, par_providers), written to
 parquet; ``read_silver`` derives the unstored nodes from them through the
-same spec. This is correct
+same spec. ``SilverSpec.stage`` writes stores that do not read each other
+at the same time: header, provider_references and codes all start at
+once over the one persisted bronze, and prices and par_providers start
+together once codes is written. This is correct
 incrementally because every stored row derives from exactly ONE bronze
 chunk and the surrogate keys are content+offset hashes (plans/silver.py) —
 batch boundaries can't split or duplicate a row, and discovery order
@@ -69,9 +72,12 @@ def stream_silver_continuous(
 
         # one source read feeds five writes: without the bronze cache the
         # header, provider_references and codes writes each re-run the
-        # Python source over every chunk of the batch. Later tiers read
-        # the store just written, as save_all reads its table, so prices
-        # and par_providers don't re-parse the in_network JSON.
+        # Python source over every chunk of the batch. Those three writes
+        # read the cached bronze at the same time; the block manager's
+        # per-block write lock computes each partition once and the others
+        # wait for it, so the source still reads each chunk once. Later
+        # tiers read the store just written, as save_all reads its table,
+        # so prices and par_providers don't re-parse the in_network JSON.
         bronze = bronze.persist()
         try:
             IN_NETWORK.stage(bronze, save, IN_NETWORK.stores)

@@ -277,6 +277,128 @@ def test_save_all_ctas_tables(spark, mrf_file, tmp_path, kind):
         spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
 
+def _recording_spec(fail_on=None):
+    """The in-network spec with each derivation wrapped to record the ids
+    of the frames it receives, and a ``save`` hook that writes nothing:
+    it records when each save starts and returns, raises on ``fail_on``,
+    and returns a fresh frame."""
+    import dataclasses
+    import threading
+    import time
+
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import IN_NETWORK
+
+    lock = threading.Lock()
+    events, returned, received = [], {}, {}
+
+    def save(name, df):
+        with lock:
+            events.append(("start", name))
+        time.sleep(0.05)  # a save that takes a while, so overlap shows
+        if name == fail_on:
+            raise RuntimeError(f"save of {name} failed")
+        out = df.select("*")
+        with lock:
+            events.append(("end", name))
+            returned[name] = out
+        return out
+
+    def recording(name, fn):
+        def wrapped(*frames):
+            received[name] = [id(f) for f in frames]
+            return fn(*frames)
+
+        return wrapped
+
+    spec = dataclasses.replace(
+        IN_NETWORK,
+        derived={
+            name: (recording(name, fn), inputs)
+            for name, (fn, inputs) in IN_NETWORK.derived.items()
+        },
+    )
+    return spec, save, events, returned, received
+
+
+def _bronze(spark, mrf_file):
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
+        IN_NETWORK,
+        _read_bronze,
+    )
+
+    return _read_bronze(
+        spark, mrf_file, IN_NETWORK, {"chunktargetbytes": 8192}
+    )
+
+
+@pytest.mark.parametrize("names", ["tables", "stores"])
+def test_stage_saves_each_node_after_its_inputs(spark, mrf_file, names):
+    """SilverSpec.stage's scheduling contract, with a save hook and no
+    warehouse: every named node is saved exactly once, a save starts only
+    after every saved node it reads (through unsaved ones) has returned,
+    and later nodes receive the frame the hook returned."""
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import IN_NETWORK
+
+    names = tuple(getattr(IN_NETWORK, names))
+    spec, save, events, returned, received = _recording_spec()
+    frames = spec.stage(_bronze(spark, mrf_file), save, names)
+    starts = [n for kind, n in events if kind == "start"]
+    assert sorted(starts) == sorted(names)
+    assert sorted(n for kind, n in events if kind == "end") == sorted(names)
+
+    def saved_inputs(name):
+        for i in spec.derived.get(name, (None, ()))[1]:
+            if i in names:
+                yield i
+            else:
+                yield from saved_inputs(i)
+
+    for name in names:
+        start = events.index(("start", name))
+        for i in saved_inputs(name):
+            assert events.index(("end", i)) < start, (name, i)
+    for name, (_, inputs) in spec.derived.items():
+        for i, got in zip(inputs, received[name]):
+            want = returned[i] if i in names else frames[i]
+            assert got == id(want), (name, i)
+    assert all(frames[n] is returned[n] for n in names)
+
+
+def test_stage_failed_save_skips_its_readers(spark, mrf_file):
+    """A save that raises on codes makes stage raise that error; nothing
+    that reads codes is saved, and the independent header branch still
+    is (the partial write save_all documents)."""
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import IN_NETWORK
+
+    spec, save, events, _, _ = _recording_spec(fail_on="codes")
+    with pytest.raises(RuntimeError, match="^save of codes failed$"):
+        spec.stage(_bronze(spark, mrf_file), save, tuple(IN_NETWORK.tables))
+    started = {n for kind, n in events if kind == "start"}
+    assert started == {"header", "providers_x_payer", "codes"}
+    assert ("end", "codes") not in events
+
+
+def test_save_all_jobs_inherit_the_callers_job_group(spark, mrf_file):
+    """Every job save_all starts, on whichever staging thread, runs in the
+    caller's job group: cancelJobGroup and group-scoped status-store
+    totals see all of them, and none runs ungrouped."""
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    tables = build_silver(spark, mrf_file, chunktargetbytes=8192)
+    db = "job_group_test"
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("silver-save-all", "save_all job-group test")
+    try:
+        tables.save_all(spark, db)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup("silver-save-all")) >= len(
+        tables.spec.tables
+    )
+
+
 def test_incremental_silver_from_streamed_bronze(spark, mrf_file, tmp_path):
     """Incremental ETL parity: stream bronze to a parquet table first
     (availableNow, includeoffsets on), then derive silver from that table —

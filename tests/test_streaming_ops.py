@@ -326,6 +326,35 @@ def test_continuous_silver_replayed_batch_writes_once(
         assert streamed[name].count() == want, name
 
 
+def test_continuous_silver_jobs_inherit_the_run_id_group(
+    spark, mrf_file, tmp_path
+):
+    """The foreachBatch writer stages its stores on driver threads; every
+    store write still runs in the query's run-ID job group, so cancelling
+    the query's group reaches it, and no write job runs ungrouped."""
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import IN_NETWORK
+    from hls_payer_mrf_sparkstreaming_spark.streaming.silver_stream import (
+        stream_silver_continuous,
+    )
+
+    tracker = spark.sparkContext.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    q = stream_silver_continuous(
+        spark,
+        mrf_file,
+        str(tmp_path / "silver"),
+        str(tmp_path / "ck"),
+        chunktargetbytes=65536,
+    )
+    assert q.awaitTermination(180), "availableNow did not drain"
+    batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    assert len(batches) == 1, batches
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped
+    assert len(tracker.getJobIdsForGroup(str(q.runId))) >= len(
+        IN_NETWORK.stores
+    )
+
+
 def test_incremental_corpus_dedup_equals_batch(spark, sf_dir, tmp_path):
     """Incremental exact dedup: three document drops arrive as separate
     micro-batches (duplicates planted within AND across drops); the

@@ -6,11 +6,14 @@ JsonMRFSource.scala:22-258): same name, same 3-column bronze schema, same
 options — re-architected for Spark's execution model:
 
 - Chunk discovery runs once on the driver (numpy-vectorized scanner) and
-  produces a byte-range manifest; each manifest row becomes one input
-  partition, so executors do an embarrassingly-parallel ``seek + read`` with
-  zero shuffle — the partition count scales with file size
-  (``chunktargetbytes``), not with buffer fills, so a 100 TB corpus keeps
-  1000 executors busy.
+  produces a byte-range manifest. Consecutive chunks of one file whose
+  payload bytes fit in ``chunktargetbytes`` are packed into one input
+  partition (a chunk at or above the target stands alone), so executors do
+  an embarrassingly-parallel ``seek + read`` with zero shuffle. The
+  partition count scales with file size, not with buffer fills, so a
+  100 TB corpus keeps 1000 executors busy, while a small file's four
+  chunks (header head, provider_references, in_network, trailer) cost one
+  Python task, not four. Every chunk is still one bronze row.
 - Streaming offsets are plain chunk indices; Spark owns checkpointing.
   Discovery is deterministic, so recovery just rescans the manifest.
 
@@ -43,6 +46,7 @@ Usage::
 from __future__ import annotations
 
 import functools
+import logging
 import os
 from dataclasses import dataclass
 
@@ -67,6 +71,8 @@ from hls_payer_mrf_sparkstreaming_spark.sources import io as mrf_io
 FORMAT_NAME = "payer-mrf"
 HEADER_KEY_IN_NETWORK = "in_network"
 HEADER_KEY_PROVIDER_REFERENCES = "provider_references"
+
+log = logging.getLogger(__name__)
 
 
 def bronze_schema(
@@ -93,47 +99,80 @@ def bronze_schema(
 
 @dataclass
 class _ChunkPartition(InputPartition):
+    """A run of consecutive manifest chunks of one file.
+
+    ``chunks`` holds each chunk's ``(start, end, header_key)`` (``end``
+    inclusive); ``start``/``end`` span the first chunk's start to the last
+    chunk's end. A headerkey-pruned run may have gaps between chunks."""
+
     path: str
     start: int
     end: int
-    header_key: str
+    chunks: tuple
     as_array: bool
     with_offsets: bool = False
 
 
+def _pack(path, chunks, target, as_array, with_offsets):
+    """Plan ``chunks`` (of one file, in manifest order) as partitions: one
+    per run of consecutive chunks whose payload bytes fit in ``target``.
+    A chunk at or above the target stands alone, so a large file's full
+    in_network chunks each keep their own task. Spark's file scan packs
+    small files the same way (``FilePartition``, ``maxPartitionBytes``);
+    this packs within a file only."""
+    runs: list[list[tuple]] = []
+    run_bytes = 0
+    for c in chunks:
+        n = c.end - c.start + 1
+        if not runs or run_bytes + n > target:
+            runs.append([])
+            run_bytes = 0
+        runs[-1].append((c.start, c.end, c.header_key))
+        run_bytes += n
+    return [
+        _ChunkPartition(
+            path, run[0][0], run[-1][1], tuple(run), as_array, with_offsets
+        )
+        for run in runs
+    ]
+
+
+def _chunk_payload(raw: bytes, header_key: str, as_array: bool):
+    if header_key == "":
+        repaired = ck.repair_header_fragment(raw)
+        return [repaired] if as_array else repaired
+    if as_array:
+        return ck.split_elements(raw)
+    return ck.wrap_array_payload(raw)
+
+
 def _read_partition(part: _ChunkPartition):
-    """Executor side: ranged read + JSON repair -> one bronze row, emitted
-    as an Arrow RecordBatch (pyspark converts tuple rows through pickle;
-    a pre-built batch skips that entirely — the payloads are MB-sized, so
-    per-row conversion cost is the ingest bottleneck).
+    """Executor side: one open, then a ranged read + JSON repair per chunk
+    -> one bronze row per chunk, emitted as a single Arrow RecordBatch
+    (pyspark converts tuple rows through pickle; a pre-built batch skips
+    that entirely — the payloads are MB-sized, so per-row conversion cost
+    is the ingest bottleneck).
 
     Reference parity: JsonChunks.scala:37-102 (seek/readFully, header fixup,
     array wrap, payloadAsArray split).
     """
     import pyarrow as pa
 
+    payloads = []
     with mrf_io.open_input(part.path) as f:
-        f.seek(part.start)
-        raw = f.read(part.end - part.start + 1)
-    if part.header_key == "":
-        repaired = ck.repair_header_fragment(raw)
-        payload = [repaired] if part.as_array else repaired
-    elif part.as_array:
-        payload = ck.split_elements(raw)
-    else:
-        payload = ck.wrap_array_payload(raw)
-    if part.as_array:
-        payload_arr = pa.array([payload], type=pa.list_(pa.string()))
-    else:
-        payload_arr = pa.array([payload], type=pa.string())
+        for start, end, hk in part.chunks:
+            f.seek(start)
+            raw = f.read(end - start + 1)
+            payloads.append(_chunk_payload(raw, hk, part.as_array))
+    payload_type = pa.list_(pa.string()) if part.as_array else pa.string()
     arrays = [
-        pa.array([part.path], type=pa.string()),
-        pa.array([part.header_key], type=pa.string()),
-        payload_arr,
+        pa.array([part.path] * len(part.chunks), type=pa.string()),
+        pa.array([c[2] for c in part.chunks], type=pa.string()),
+        pa.array(payloads, type=payload_type),
     ]
     names = ["file_name", "header_key", "json_payload"]
     if part.with_offsets:
-        arrays.append(pa.array([part.start], type=pa.int64()))
+        arrays.append(pa.array([c[0] for c in part.chunks], type=pa.int64()))
         names.append("chunk_start")
     yield pa.RecordBatch.from_arrays(arrays, names=names)
 
@@ -266,7 +305,8 @@ def _scan_chunks_cached(path: str, chunk_target: int, buffersize: int):
 
 
 class PayerMrfBatchReader(DataSourceReader):
-    """Batch mode: full manifest -> one partition per chunk.
+    """Batch mode: full manifest -> one partition per run of consecutive
+    small chunks of one file (``_pack``); one bronze row per chunk.
 
     Accepts a file, a directory, or a glob (a 100 TB corpus is many MRF
     files). Discovery parallelizes across files with driver threads — the
@@ -282,20 +322,16 @@ class PayerMrfBatchReader(DataSourceReader):
         paths = mrf_io.resolve_input_paths(opts.path, opts.decompress_dir)
 
         def scan_one(path: str):
-            return [
-                _ChunkPartition(
-                    path,
-                    c.start,
-                    c.end,
-                    c.header_key,
-                    opts.payload_as_array,
-                    opts.include_offsets,
-                )
-                for c in _scan_chunks_cached(
-                    path, opts.chunk_target, opts.buffersize
-                )
-                if hk is None or c.header_key == hk
-            ]
+            chunks = _scan_chunks_cached(
+                path, opts.chunk_target, opts.buffersize
+            )
+            return _pack(
+                path,
+                [c for c in chunks if hk is None or c.header_key == hk],
+                opts.chunk_target,
+                opts.payload_as_array,
+                opts.include_offsets,
+            )
 
         if len(paths) == 1:
             return scan_one(paths[0])
@@ -370,12 +406,13 @@ class PayerMrfStreamReader(DataSourceStreamReader):
                 self._order.append(scan)
         self._listed = True
 
-    def _pull(self, n: int, max_bytes: int = 0) -> int:
+    def _pull(self, n: int, max_bytes: int = 0) -> tuple[int, int]:
         """Release up to n more chunks (n <= 0: all known + newly listed
-        files, to exhaustion); returns count released. ``max_bytes > 0``
-        additionally stops after the released byte ranges reach the cap
-        (checked after each chunk, so at least one chunk always releases
-        — progress is guaranteed even when one chunk exceeds the cap)."""
+        files, to exhaustion); returns (chunks, payload bytes) released.
+        ``max_bytes > 0`` additionally stops after the released byte ranges
+        reach the cap (checked after each chunk, so at least one chunk
+        always releases — progress is guaranteed even when one chunk
+        exceeds the cap)."""
         if not self._listed:
             self._list_files()
         budget = n if n > 0 else float("inf")
@@ -406,7 +443,7 @@ class PayerMrfStreamReader(DataSourceStreamReader):
                 bytes_pulled += c.end - c.start + 1
             except StopIteration:
                 scan.exhausted = True
-        return pulled
+        return pulled, bytes_pulled
 
     def _offset(self) -> dict:
         return {
@@ -429,9 +466,15 @@ class PayerMrfStreamReader(DataSourceStreamReader):
         return {"files": {}}
 
     def latestOffset(self):
-        self._pull(
+        chunks, nbytes = self._pull(
             self._opts.max_chunks_per_batch,
             self._opts.max_bytes_per_batch,
+        )
+        log.debug(
+            "latestOffset: %d files known, released %d chunks / %d bytes",
+            len(self._scans),
+            chunks,
+            nbytes,
         )
         return self._offset()
 
@@ -440,6 +483,7 @@ class PayerMrfStreamReader(DataSourceStreamReader):
         hi_map = self._to_file_map(end)
         opts = self._opts
         parts: list[_ChunkPartition] = []
+        n_chunks = 0
         for p, hi in hi_map.items():
             lo = lo_map.get(p, 0)
             if hi <= lo:
@@ -463,17 +507,19 @@ class PayerMrfStreamReader(DataSourceStreamReader):
                     f"payer-mrf: offset {lo} for {p} already committed "
                     f"(GC base {scan.gc}); restart from a checkpoint"
                 )
+            n_chunks += hi - lo
             parts.extend(
-                _ChunkPartition(
+                _pack(
                     p,
-                    c.start,
-                    c.end,
-                    c.header_key,
+                    scan.rows[lo - scan.gc : hi - scan.gc],
+                    opts.chunk_target,
                     opts.payload_as_array,
                     opts.include_offsets,
                 )
-                for c in scan.rows[lo - scan.gc : hi - scan.gc]
             )
+        log.debug(
+            "partitions: %d chunks -> %d partitions", n_chunks, len(parts)
+        )
         return parts
 
     def read(self, partition: _ChunkPartition):
@@ -527,7 +573,8 @@ def _reader_cache_key(path: str, opt_l: dict):
             path, opt_l.get("decompressdir")
         )
         stat_sig = tuple(
-            (p, os.stat(p).st_size, os.stat(p).st_mtime_ns) for p in paths
+            (p, st.st_size, st.st_mtime_ns)
+            for p, st in zip(paths, map(os.stat, paths))
         )
     except Exception:
         return None

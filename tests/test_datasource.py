@@ -580,8 +580,14 @@ def test_max_bytes_per_batch_rate_limits_release(tmp_path):
         _Options({"path": str(d), "chunktargetbytes": 1024})
     )
     ref._pull(0)
-    all_parts = ref.partitions({"files": {}}, ref._offset())
-    assert len(all_parts) > 6
+
+    def chunks(parts):
+        # partitions pack runs of small chunks; release is per chunk
+        return [(p.path, *c) for p in parts for c in p.chunks]
+
+    all_chunks = chunks(ref.partitions({"files": {}}, ref._offset()))
+    assert len(all_chunks) > 6
+    max_chunk = max(end - start + 1 for _, start, end, _ in all_chunks)
 
     seen = []
     prev = r.initialOffset()
@@ -589,21 +595,111 @@ def test_max_bytes_per_batch_rate_limits_release(tmp_path):
         cur = r.latestOffset()
         if cur == prev:
             break
-        parts = r.partitions(prev, cur)
-        assert parts, "empty batch despite advancing offset"
-        batch_bytes = sum(p.end - p.start + 1 for p in parts)
+        batch = chunks(r.partitions(prev, cur))
+        assert batch, "empty batch despite advancing offset"
+        batch_bytes = sum(end - start + 1 for _, start, end, _ in batch)
         # cap + one-chunk overshoot bound (the chunk that crossed the cap)
-        max_chunk = max(p.end - p.start + 1 for p in all_parts)
         assert batch_bytes <= cap + max_chunk
-        seen.extend(parts)
+        seen.extend(batch)
         prev = cur
     else:
         raise AssertionError("stream did not drain in 200 batches")
 
-    key = lambda p: (p.path, p.start, p.end)  # noqa: E731
-    assert sorted(map(key, seen)) == sorted(map(key, all_parts))
+    assert sorted(seen) == sorted(all_chunks)
     # the cap actually split the stream into multiple batches
-    assert len(seen) == len(all_parts)
+    assert len(seen) == len(all_chunks)
+
+
+def test_pack_plans_runs_of_small_chunks(tmp_path):
+    """Planning packs consecutive chunks of one file into one partition
+    while their payload fits in chunktargetbytes; a chunk at or above the
+    target stands alone. Every manifest chunk is planned exactly once, in
+    order — protocol-level, no Spark session needed."""
+    from hls_payer_mrf_sparkstreaming_spark.sources.chunker import (
+        scan_chunks,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
+        PayerMrfBatchReader,
+        _Options,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.synth import write_mrf_file
+
+    d = tmp_path / "pack"
+    d.mkdir()
+    paths = [str(d / f"m{i}.json") for i in range(2)]
+    for i, path in enumerate(paths):
+        write_mrf_file(path, n_in_network=40, seed=7 + i)
+
+    target = 8192
+    parts = PayerMrfBatchReader(
+        _Options({"path": str(d), "chunktargetbytes": target})
+    ).partitions()
+    assert {p.path for p in parts} == set(paths)
+    for path in paths:
+        manifest = [
+            (c.start, c.end, c.header_key) for c in scan_chunks(path, target)
+        ]
+        mine = [p for p in parts if p.path == path]
+        # one file per partition, its chunks exactly once and in order
+        assert [c for p in mine for c in p.chunks] == manifest
+        assert len(mine) < len(manifest)
+        for p in mine:
+            assert (p.start, p.end) == (p.chunks[0][0], p.chunks[-1][1])
+            payload = sum(end - start + 1 for start, end, _ in p.chunks)
+            assert len(p.chunks) == 1 or payload <= target
+
+    # headerkey pruning packs the header head and trailer across the gap
+    (header,) = PayerMrfBatchReader(
+        _Options({"path": paths[0], "headerkey": ""})
+    ).partitions()
+    assert [hk for _, _, hk in header.chunks] == ["", ""]
+    assert header.chunks[0][1] + 1 < header.chunks[1][0]
+
+
+def test_packed_partitions_read_one_row_per_chunk(spark, mrf_file):
+    """A packed partition still yields one bronze row per chunk: the rows
+    equal those built chunk by chunk from the manifest, in plain and
+    payloadAsArray modes, from fewer partitions than chunks."""
+    from hls_payer_mrf_sparkstreaming_spark.sources import chunker as ck
+
+    target = 32768
+    manifest = list(ck.scan_chunks(mrf_file, target))
+    raws = []
+    with open(mrf_file, "rb") as f:
+        for c in manifest:
+            f.seek(c.start)
+            raws.append(f.read(c.end - c.start + 1))
+
+    for as_array in (False, True):
+        want = []
+        for c, raw in zip(manifest, raws):
+            if c.header_key == "":
+                payload = ck.repair_header_fragment(raw)
+                payload = (payload,) if as_array else payload
+            elif as_array:
+                payload = tuple(ck.split_elements(raw))
+            else:
+                payload = ck.wrap_array_payload(raw)
+            want.append((c.header_key, payload, c.start))
+        df = read_payer_mrf(
+            spark,
+            mrf_file,
+            chunktargetbytes=target,
+            payloadasarray=str(as_array).lower(),
+            includeoffsets="true",
+        )
+        assert df.rdd.getNumPartitions() < len(manifest)
+        rows = df.collect()
+        assert {r["file_name"] for r in rows} == {mrf_file}
+        have = [
+            (
+                r["header_key"],
+                tuple(r["json_payload"]) if as_array else r["json_payload"],
+                r["chunk_start"],
+            )
+            for r in rows
+        ]
+        assert sorted(have) == sorted(want)
 
 
 class _FakeRemoteFS:

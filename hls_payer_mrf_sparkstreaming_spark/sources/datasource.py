@@ -14,8 +14,14 @@ options — re-architected for Spark's execution model:
   100 TB corpus keeps 1000 executors busy, while a small file's four
   chunks (header head, provider_references, in_network, trailer) cost one
   Python task, not four. Every chunk is still one bronze row.
-- Streaming offsets are plain chunk indices; Spark owns checkpointing.
-  Discovery is deterministic, so recovery just rescans the manifest.
+- Both readers take each file's manifest from one stat-keyed cache
+  (``_scan_chunks_cached``). The stream reader scans a file whole the first
+  time a micro-batch reaches it, then releases its chunks incrementally.
+  Streaming offsets are plain per-file chunk indices; Spark owns
+  checkpointing. Discovery is deterministic, so recovery just rescans.
+- Every partition carries its file's ``(size, mtime_ns)`` at planning; the
+  executor read checks it, so a replaced file fails loudly, never reads as
+  garbage.
 
 Options (case-insensitive, reference parity):
   ``payloadAsArray``   "true" -> ``json_payload array<string>`` of element
@@ -103,7 +109,9 @@ class _ChunkPartition(InputPartition):
 
     ``chunks`` holds each chunk's ``(start, end, header_key)`` (``end``
     inclusive); ``start``/``end`` span the first chunk's start to the last
-    chunk's end. A headerkey-pruned run may have gaps between chunks."""
+    chunk's end. A headerkey-pruned run may have gaps between chunks.
+    ``sig`` is the file's ``(size, mtime_ns)`` the manifest was scanned
+    from (``None`` for remote inputs, which are not checked)."""
 
     path: str
     start: int
@@ -111,15 +119,17 @@ class _ChunkPartition(InputPartition):
     chunks: tuple
     as_array: bool
     with_offsets: bool = False
+    sig: tuple | None = None
 
 
-def _pack(path, chunks, target, as_array, with_offsets):
+def _pack(opts, path, chunks, sig):
     """Plan ``chunks`` (of one file, in manifest order) as partitions: one
-    per run of consecutive chunks whose payload bytes fit in ``target``.
-    A chunk at or above the target stands alone, so a large file's full
-    in_network chunks each keep their own task. Spark's file scan packs
-    small files the same way (``FilePartition``, ``maxPartitionBytes``);
-    this packs within a file only."""
+    per run of consecutive chunks whose payload bytes fit in
+    ``chunktargetbytes``. A chunk at or above the target stands alone, so a
+    large file's full in_network chunks each keep their own task. Spark's
+    file scan packs small files the same way (``FilePartition``,
+    ``maxPartitionBytes``); this packs within a file only."""
+    target = opts.chunk_target
     runs: list[list[tuple]] = []
     run_bytes = 0
     for c in chunks:
@@ -129,10 +139,9 @@ def _pack(path, chunks, target, as_array, with_offsets):
             run_bytes = 0
         runs[-1].append((c.start, c.end, c.header_key))
         run_bytes += n
+    flags = (opts.payload_as_array, opts.include_offsets)
     return [
-        _ChunkPartition(
-            path, run[0][0], run[-1][1], tuple(run), as_array, with_offsets
-        )
+        _ChunkPartition(path, run[0][0], run[-1][1], tuple(run), *flags, sig)
         for run in runs
     ]
 
@@ -160,6 +169,15 @@ def _read_partition(part: _ChunkPartition):
 
     payloads = []
     with mrf_io.open_input(part.path) as f:
+        if part.sig is not None:
+            st = os.fstat(f.fileno())
+            if (st.st_size, st.st_mtime_ns) != part.sig:
+                raise RuntimeError(
+                    f"payer-mrf: {part.path} changed since it was planned "
+                    f"((size, mtime_ns) {part.sig} -> "
+                    f"{(st.st_size, st.st_mtime_ns)}); cannot read bytes "
+                    f"{part.start}-{part.end}"
+                )
         for start, end, hk in part.chunks:
             f.seek(start)
             raw = f.read(end - start + 1)
@@ -233,12 +251,12 @@ class _Options:
 
     @property
     def max_chunks_per_batch(self) -> int:
-        """0 (default) = discover the whole file in the first micro-batch.
+        """0 (default) = release every known chunk in the first micro-batch.
 
-        availableNow snapshots latestOffset once, so incremental discovery
-        (>0) is only safe with processingTime triggers, where it pipelines
-        discovery with downstream processing like the reference's reader
-        thread.
+        >0 releases at most this many chunks per micro-batch. A file is
+        still scanned whole the first time a release reaches it; only the
+        release is incremental. availableNow snapshots latestOffset once,
+        so >0 is only safe with processingTime triggers.
         """
         return int(self.get("maxchunksperbatch", 0))
 
@@ -282,7 +300,8 @@ class PayerMrfDataSource(DataSource):
 # chunk_target, buffersize) so any file change or chunking-parameter
 # change invalidates naturally; not session-scoped, since the bytes do
 # not depend on the session. A manifest is a few small tuples per
-# ~chunktargetbytes of input.
+# ~chunktargetbytes of input. Both readers (and so every stream restart)
+# take manifests from here.
 @functools.lru_cache(maxsize=256)
 def _scan_manifest(
     abspath: str, size: int, mtime_ns: int, chunk_target: int, buffersize: int
@@ -290,18 +309,23 @@ def _scan_manifest(
     return tuple(ck.scan_chunks(abspath, chunk_target, buffersize))
 
 
-def _scan_chunks_cached(path: str, chunk_target: int, buffersize: int):
+def _scan_chunks_cached(path: str, opts: _Options):
+    """``(chunks, sig)``, as both readers plan ``path``: its cached
+    manifest pruned to ``headerkey``, and the ``(size, mtime_ns)`` the
+    cache keyed it on. Remote inputs have no ``os.stat``: they are scanned
+    uncached, with ``sig`` ``None``."""
+    target, buffersize = opts.chunk_target, opts.buffersize
     try:
         st = os.stat(path)
     except OSError:
-        return ck.scan_chunks(path, chunk_target, buffersize)
-    return _scan_manifest(
-        os.path.abspath(path),
-        st.st_size,
-        st.st_mtime_ns,
-        chunk_target,
-        buffersize,
-    )
+        chunks, sig = ck.scan_chunks(path, target, buffersize), None
+    else:
+        sig = (st.st_size, st.st_mtime_ns)
+        chunks = _scan_manifest(
+            os.path.abspath(path), *sig, target, buffersize
+        )
+    hk = opts.header_key  # None = no constraint
+    return [c for c in chunks if hk is None or c.header_key == hk], sig
 
 
 class PayerMrfBatchReader(DataSourceReader):
@@ -318,20 +342,10 @@ class PayerMrfBatchReader(DataSourceReader):
 
     def partitions(self):
         opts = self._opts
-        hk = opts.header_key  # None = no constraint
         paths = mrf_io.resolve_input_paths(opts.path, opts.decompress_dir)
 
         def scan_one(path: str):
-            chunks = _scan_chunks_cached(
-                path, opts.chunk_target, opts.buffersize
-            )
-            return _pack(
-                path,
-                [c for c in chunks if hk is None or c.header_key == hk],
-                opts.chunk_target,
-                opts.payload_as_array,
-                opts.include_offsets,
-            )
+            return _pack(opts, path, *_scan_chunks_cached(path, opts))
 
         if len(paths) == 1:
             return scan_one(paths[0])
@@ -344,22 +358,6 @@ class PayerMrfBatchReader(DataSourceReader):
         return _read_partition(partition)
 
 
-class _FileScan:
-    """Per-file lazy discovery state: a pulled-on-demand chunk generator,
-    the released-but-uncommitted chunk rows, and the committed GC base."""
-
-    __slots__ = ("gen", "rows", "gc", "exhausted")
-
-    def __init__(self, gen):
-        self.gen = gen
-        self.rows: list[ck.Chunk] = []
-        self.gc = 0
-        self.exhausted = False
-
-    def released(self) -> int:
-        return self.gc + len(self.rows)
-
-
 class PayerMrfStreamReader(DataSourceStreamReader):
     """Micro-batch streaming over per-file chunk manifests.
 
@@ -370,85 +368,37 @@ class PayerMrfStreamReader(DataSourceStreamReader):
     file that arrives mid-stream — even one sorting lexicographically
     before already-committed files — only adds a new key, it can never
     shift another file's committed position (a single global index would).
-    Discovery is pulled lazily in deterministic sorted-path order, up to
-    ``maxchunksperbatch`` chunks per ``latestOffset`` call, so downstream
-    processing pipelines with discovery like the reference's reader thread
-    (JsonMRFSource.scala:138-178) but without shared mutable state; when
-    every known file is exhausted, the input is re-listed so directory
-    streams pick up late-arriving files.
+    Manifests come from the batch reader's stat-keyed cache
+    (``_scan_chunks_cached``): a file is scanned whole the first time a
+    ``latestOffset`` call reaches it, and its chunks are then released in
+    deterministic sorted-path order, up to ``maxchunksperbatch`` chunks and
+    ``maxbytesperbatch`` payload bytes per call. When every known file is
+    released, the input is re-listed (once per call) so directory streams
+    pick up late-arriving files.
     """
 
     def __init__(self, opts: _Options):
         self._opts = opts
-        self._scans: dict[str, _FileScan] = {}  # insertion = release order
-        self._order: list[_FileScan] = []  # same order, for the pull cursor
-        self._cursor = 0  # first possibly-non-exhausted entry in _order
-        self._listed = False
+        # path -> [manifest, sig, n_released]; the manifest is None until
+        # the file is first reached. Insertion order is release order.
+        self._files: dict[str, list] = {}
 
-    # -- discovery ----------------------------------------------------------
+    def _entry(self, path: str, scan: bool = True) -> list:
+        """``path``'s ``[manifest, sig, n_released]``, added on first sight;
+        ``scan`` scans the file whole if that has not happened yet."""
+        entry = self._files.setdefault(path, [None, None, 0])
+        if scan and entry[0] is None:
+            entry[0], entry[1] = _scan_chunks_cached(path, self._opts)
+        return entry
 
-    def _file_gen(self, path: str):
-        hk = self._opts.header_key
-        for c in ck.scan_chunks(
-            path, self._opts.chunk_target, self._opts.buffersize
-        ):
-            if hk is None or c.header_key == hk:
-                yield c
-
-    def _list_files(self):
-        paths = mrf_io.resolve_input_paths(
-            self._opts.path, self._opts.decompress_dir
-        )
-        for p in paths:
-            if p not in self._scans:
-                scan = _FileScan(self._file_gen(p))
-                self._scans[p] = scan
-                self._order.append(scan)
-        self._listed = True
-
-    def _pull(self, n: int, max_bytes: int = 0) -> tuple[int, int]:
-        """Release up to n more chunks (n <= 0: all known + newly listed
-        files, to exhaustion); returns (chunks, payload bytes) released.
-        ``max_bytes > 0`` additionally stops after the released byte ranges
-        reach the cap (checked after each chunk, so at least one chunk
-        always releases — progress is guaranteed even when one chunk
-        exceeds the cap)."""
-        if not self._listed:
-            self._list_files()
-        budget = n if n > 0 else float("inf")
-        byte_budget = max_bytes if max_bytes > 0 else float("inf")
-        pulled = 0
-        bytes_pulled = 0
-        relisted = False
-        while pulled < budget and bytes_pulled < byte_budget:
-            # files exhaust in release order and new ones append, so a
-            # monotone cursor keeps this O(1) per chunk even for
-            # thousand-file corpora
-            while (
-                self._cursor < len(self._order)
-                and self._order[self._cursor].exhausted
-            ):
-                self._cursor += 1
-            if self._cursor >= len(self._order):
-                if relisted:
-                    break
-                self._list_files()  # pick up late-arriving files
-                relisted = True
-                continue
-            scan = self._order[self._cursor]
-            try:
-                c = next(scan.gen)
-                scan.rows.append(c)
-                pulled += 1
-                bytes_pulled += c.end - c.start + 1
-            except StopIteration:
-                scan.exhausted = True
-        return pulled, bytes_pulled
-
-    def _offset(self) -> dict:
-        return {
-            "files": {p: s.released() for p, s in self._scans.items()}
-        }
+    def _in_release_order(self):
+        """Every file's entry in release order, scanned when reached; after
+        the known files, the input is re-listed once for late arrivals."""
+        yield from map(self._entry, list(self._files))
+        opts = self._opts
+        for p in mrf_io.resolve_input_paths(opts.path, opts.decompress_dir):
+            self._entry(p, scan=False)
+        yield from map(self._entry, list(self._files))
 
     def _to_file_map(self, offset: dict) -> dict[str, int]:
         if "files" not in offset:
@@ -466,57 +416,54 @@ class PayerMrfStreamReader(DataSourceStreamReader):
         return {"files": {}}
 
     def latestOffset(self):
-        chunks, nbytes = self._pull(
-            self._opts.max_chunks_per_batch,
-            self._opts.max_bytes_per_batch,
-        )
+        """Release up to ``maxchunksperbatch`` more chunks (0: all). With
+        ``maxbytesperbatch`` the release also stops once its byte ranges
+        reach the cap, checked after each chunk, so at least one chunk
+        always releases and the stream cannot stall."""
+        opts = self._opts
+        budget = opts.max_chunks_per_batch or float("inf")
+        byte_budget = opts.max_bytes_per_batch or float("inf")
+        n = nbytes = 0
+        for entry in self._in_release_order():
+            chunks, _, done = entry
+            while done < len(chunks) and n < budget and nbytes < byte_budget:
+                nbytes += chunks[done].end - chunks[done].start + 1
+                done += 1
+                n += 1
+            entry[2] = done
+            if n >= budget or nbytes >= byte_budget:
+                break
         log.debug(
             "latestOffset: %d files known, released %d chunks / %d bytes",
-            len(self._scans),
-            chunks,
+            len(self._files),
+            n,
             nbytes,
         )
-        return self._offset()
+        return {"files": {p: e[2] for p, e in self._files.items()}}
 
     def partitions(self, start, end):
         lo_map = self._to_file_map(start)
         hi_map = self._to_file_map(end)
-        opts = self._opts
         parts: list[_ChunkPartition] = []
         n_chunks = 0
         for p, hi in hi_map.items():
+            # A restarted query replays its last offset as
+            # partitions(latest, latest) (setLatestSeenOffset), so record
+            # the release BEFORE skipping an empty range: the next
+            # latestOffset must resume from here, not from chunk 0.
+            entry = self._entry(p, scan=False)
+            entry[2] = max(entry[2], hi)
             lo = lo_map.get(p, 0)
             if hi <= lo:
                 continue
-            scan = self._scans.get(p)
-            if scan is None:  # restart: re-derive this file's manifest
-                scan = self._scans[p] = _FileScan(self._file_gen(p))
-                self._order.append(scan)
-            while scan.released() < hi and not scan.exhausted:
-                try:
-                    scan.rows.append(next(scan.gen))
-                except StopIteration:
-                    scan.exhausted = True
-            if scan.released() < hi:
+            chunks, sig, _ = self._entry(p)
+            if hi > len(chunks):
                 raise RuntimeError(
                     f"payer-mrf: offset {hi} beyond end of manifest for "
-                    f"{p} ({scan.released()} chunks) — file changed?"
-                )
-            if lo < scan.gc:
-                raise RuntimeError(
-                    f"payer-mrf: offset {lo} for {p} already committed "
-                    f"(GC base {scan.gc}); restart from a checkpoint"
+                    f"{p} ({len(chunks)} chunks) — file changed?"
                 )
             n_chunks += hi - lo
-            parts.extend(
-                _pack(
-                    p,
-                    scan.rows[lo - scan.gc : hi - scan.gc],
-                    opts.chunk_target,
-                    opts.payload_as_array,
-                    opts.include_offsets,
-                )
-            )
+            parts.extend(_pack(self._opts, p, chunks[lo:hi], sig))
         log.debug(
             "partitions: %d chunks -> %d partitions", n_chunks, len(parts)
         )
@@ -526,18 +473,8 @@ class PayerMrfStreamReader(DataSourceStreamReader):
         return _read_partition(partition)
 
     def commit(self, end):
-        # free committed manifest entries (reference JsonMRFSource.scala:226-238)
-        for p, hi in self._to_file_map(end).items():
-            scan = self._scans.get(p)
-            if scan is not None and hi > scan.gc:
-                del scan.rows[: hi - scan.gc]
-                scan.gc = hi
-
-    def stop(self):
-        self._scans = {}
-        self._order = []
-        self._cursor = 0
-        self._listed = False
+        # nothing to free: a cached manifest is one tuple per ~16 MB chunk
+        self._to_file_map(end)
 
 
 def register(spark) -> None:

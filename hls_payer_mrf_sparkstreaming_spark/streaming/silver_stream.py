@@ -50,10 +50,11 @@ def stream_silver_continuous(
 
     Default trigger is ``availableNow`` (full-manifest discovery, drain
     and stop). Pass ``trigger_interval`` for a ``processingTime`` trigger
-    — required when pipelining discovery with ``maxchunksperbatch>0``,
-    which availableNow cannot use (it needs the whole manifest in the
+    — required for incremental release with ``maxchunksperbatch>0``,
+    which availableNow cannot use (it needs every chunk released by the
     first ``latestOffset``); the caller then watches progress and stops
-    the query."""
+    the query. Either way a file is scanned whole the first time a
+    micro-batch reaches it."""
     from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
         IN_NETWORK,
         silver_source_options,

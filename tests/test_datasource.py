@@ -294,11 +294,11 @@ def test_filesystem_option_accepted_noop(spark, mrf_file):
 
 
 def test_pipelined_incremental_discovery(spark, mrf_file, tmp_path):
-    """maxchunksperbatch>0 + processingTime trigger: discovery is released a
-    few chunks per latestOffset call, so Spark consumes earlier micro-batches
-    while later chunks are still being discovered (the reference's
-    reader-thread pipelining, JsonMRFSource.scala:138-178) — and commit()
-    GC frees released manifest entries without breaking later batches."""
+    """maxchunksperbatch>0 + processingTime trigger: the file is scanned
+    whole when the first latestOffset reaches it, then its chunks are
+    released a few per call, so the stream drains over several non-empty
+    micro-batches (the reference's reader thread releases chunks the same
+    way, JsonMRFSource.scala:138-178) and ends equal to the batch read."""
     import time
 
     out = str(tmp_path / "bronze_pipelined")
@@ -579,13 +579,12 @@ def test_max_bytes_per_batch_rate_limits_release(tmp_path):
     ref = PayerMrfStreamReader(
         _Options({"path": str(d), "chunktargetbytes": 1024})
     )
-    ref._pull(0)
 
     def chunks(parts):
         # partitions pack runs of small chunks; release is per chunk
         return [(p.path, *c) for p in parts for c in p.chunks]
 
-    all_chunks = chunks(ref.partitions({"files": {}}, ref._offset()))
+    all_chunks = chunks(ref.partitions({"files": {}}, ref.latestOffset()))
     assert len(all_chunks) > 6
     max_chunk = max(end - start + 1 for _, start, end, _ in all_chunks)
 
@@ -608,6 +607,114 @@ def test_max_bytes_per_batch_rate_limits_release(tmp_path):
     assert sorted(seen) == sorted(all_chunks)
     # the cap actually split the stream into multiple batches
     assert len(seen) == len(all_chunks)
+
+
+def _drain(reader, start=None):
+    """Release a stream reader's input to exhaustion; returns each
+    non-empty batch's partitions, as Spark would plan them."""
+    prev = reader.initialOffset() if start is None else start
+    batches = []
+    for _ in range(500):
+        cur = reader.latestOffset()
+        if cur == prev:
+            return batches
+        batches.append(reader.partitions(prev, cur))
+        prev = cur
+    raise AssertionError("stream did not drain in 500 batches")
+
+
+def test_restart_resumes_rate_limited_release(tmp_path):
+    """A restarted query replays its last committed offset E as
+    partitions(E, E) before asking for a new one; a rate-limited reader
+    must resume from E, not from chunk 0, and release every later chunk
+    exactly once — protocol-level, no Spark session needed."""
+    from hls_payer_mrf_sparkstreaming_spark.sources.chunker import (
+        scan_chunks,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
+        PayerMrfStreamReader,
+        _Options,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.synth import write_mrf_file
+
+    path = str(tmp_path / "m.json")
+    write_mrf_file(path, n_in_network=40, seed=7)
+    target = 1024
+    manifest = [
+        (c.start, c.end, c.header_key) for c in scan_chunks(path, target)
+    ]
+    assert len(manifest) > 10
+
+    reader = PayerMrfStreamReader(
+        _Options(
+            {"path": path, "chunktargetbytes": target, "maxchunksperbatch": 2}
+        )
+    )
+    committed = {"files": {path: 6}}
+    assert reader.partitions(committed, committed) == []
+    first = reader.latestOffset()
+    assert first == {"files": {path: 8}}
+    batches = [reader.partitions(committed, first)] + _drain(reader, first)
+    assert all(sum(len(p.chunks) for p in b) <= 2 for b in batches)
+    assert [c for b in batches for p in b for c in p.chunks] == manifest[6:]
+
+
+@pytest.mark.parametrize("headerkey", [None, "in_network"])
+def test_stream_and_batch_plan_one_manifest(tmp_path, headerkey):
+    """Both readers plan from one manifest: a drained stream plans exactly
+    the batch reader's partitions — no Spark session needed."""
+    from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
+        PayerMrfBatchReader,
+        PayerMrfStreamReader,
+        _Options,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.synth import write_mrf_file
+
+    for i in range(3):
+        write_mrf_file(str(tmp_path / f"m{i}.json"), n_in_network=30, seed=i)
+    opts = {"path": str(tmp_path), "chunktargetbytes": 4096}
+    if headerkey is not None:
+        opts["headerkey"] = headerkey
+
+    batch = PayerMrfBatchReader(_Options(opts)).partitions()
+    stream = PayerMrfStreamReader(_Options(opts))
+    drained = stream.partitions(stream.initialOffset(), stream.latestOffset())
+    assert len({p.path for p in batch}) == 3
+    assert drained == batch
+
+
+@pytest.mark.parametrize("stream", [False, True])
+def test_replaced_file_fails_loudly(tmp_path, stream):
+    """A file replaced after planning must fail its read and name the file
+    and byte range, never read the new bytes at the old offsets — both
+    readers, protocol-level, no Spark session needed."""
+    from hls_payer_mrf_sparkstreaming_spark.sources.datasource import (
+        PayerMrfBatchReader,
+        PayerMrfStreamReader,
+        _Options,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.sources.synth import write_mrf_file
+
+    path, other = str(tmp_path / "m.json"), str(tmp_path / "other.json")
+    write_mrf_file(path, n_in_network=40, seed=7)
+    write_mrf_file(other, n_in_network=40, seed=8)
+    opts = _Options({"path": path, "chunktargetbytes": 1024})
+    if stream:
+        reader = PayerMrfStreamReader(opts)
+        parts = reader.partitions(reader.initialOffset(), reader.latestOffset())
+    else:
+        reader = PayerMrfBatchReader(opts)
+        parts = reader.partitions()
+    part = parts[-1]
+    list(reader.read(part))  # unchanged: reads
+
+    sig = [(st.st_size, st.st_mtime_ns) for st in map(os.stat, (path, other))]
+    assert sig[0] != sig[1]
+    os.replace(other, path)
+    with pytest.raises(RuntimeError, match="changed since it was planned") as e:
+        list(reader.read(part))
+    assert path in str(e.value)
+    assert f"{part.start}-{part.end}" in str(e.value)
 
 
 def test_pack_plans_runs_of_small_chunks(tmp_path):

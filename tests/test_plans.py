@@ -1318,14 +1318,42 @@ def test_network_overlap_reduces_before_join(spark):
     assert n_gen <= 6, f"parse lineage duplicated: {n_gen} runtime Generates\n{p}"
 
 
-def test_gold_shoppable_filters_before_explode(spark):
+def test_gold_shoppable_filters_before_explode(spark, tmp_path):
+    from hls_payer_mrf_sparkstreaming_spark.plans.mrf_queries import (
+        build_silver_cached,
+        fixture_path,
+    )
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
+        shoppable_price,
+    )
+
     # the one-code filter must precede the explodes (filter-first
     # derivation from codes); joining the prices/par_providers facts
     # would scan the whole fact and re-execute the parse per join side
     p = plan(spark, "mrf_gold_shoppable")
     assert "SortMergeJoin" not in p, p
+    assert "BroadcastHashJoin" in p, p
     n_gen = runtime_generates(p)
     assert n_gen <= 4, f"fact-scan join shape returned: {n_gen} runtime Generates\n{p}"
+    # on saved tables the one-code predicate reaches the codes parquet
+    # scan (the registry entry reads session-cached frames, which have no
+    # scan to push into)
+    t = build_silver_cached(spark, fixture_path(), chunktargetbytes=65536)
+    t.codes.write.parquet(str(tmp_path / "codes"))
+    t.providers_x_payer.write.parquet(str(tmp_path / "pxp"))
+    gold = shoppable_price(
+        spark.read.parquet(str(tmp_path / "codes")),
+        spark.read.parquet(str(tmp_path / "pxp")),
+        "10000",
+        "41-4769795",
+    )
+    jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    saved = gold._jdf.queryExecution().explainString(jmode)
+    assert "BroadcastHashJoin" in saved, saved
+    pushed = re.findall(r"^PushedFilters: (.*)$", saved, re.M)
+    assert any("EqualTo(billing_code," in f for f in pushed), saved
 
 
 def test_payer_compare_single_parse_per_payer(spark):

@@ -103,6 +103,202 @@ def test_gold_on_cms_sample(spark, cms_samples):
     assert tables.shoppable_price("27447", "11-1111111").count() == 0
 
 
+def _chained_shoppable_price(codes, providers_x_payer, billing_code, tin_value):
+    """The gold query as the chain of DataFrame calls it used to be built
+    from: the reference the one-statement SQL form must match row for
+    row."""
+    proc = codes.filter(
+        (F.col("billing_code") == billing_code)
+        & (F.col("negotiation_arrangement") == "ffs")
+    )
+    price_refs = (
+        proc.select(
+            "billing_code",
+            "description",
+            F.explode("negotiated_rates").alias("nr"),
+        )
+        .select(
+            "billing_code",
+            "description",
+            F.col("nr.provider_references").alias("refs"),
+            F.explode("nr.negotiated_prices").alias("price"),
+        )
+        .filter(F.col("price.negotiated_type") == "negotiated")
+        .select(
+            "billing_code",
+            "description",
+            F.col("price.billing_class").alias("billing_class"),
+            F.col("price.billing_code_modifier").alias(
+                "billing_code_modifier"
+            ),
+            F.col("price.service_code").alias("service_code"),
+            F.col("price.negotiated_rate").alias("negotiated_rate"),
+            F.explode("refs").alias("provider_reference_id"),
+        )
+    )
+    provider = providers_x_payer.filter(F.col("tin.value") == tin_value)
+    return price_refs.join(
+        F.broadcast(provider),
+        F.col("provider_reference_id") == F.col("provider_group_id"),
+    ).select(
+        "billing_code",
+        "description",
+        "billing_class",
+        "billing_code_modifier",
+        "service_code",
+        "negotiated_rate",
+        "npi",
+        "tin",
+    )
+
+
+def _row_multiset(df):
+    from collections import Counter
+
+    return Counter(
+        json.dumps(r.asDict(recursive=True), sort_keys=True)
+        for r in df.collect()
+    )
+
+
+def _gold_edge_cases_doc():
+    """One in-network file with every shape the gold query filters on."""
+
+    def price(rate, negotiated_type="negotiated"):
+        return {
+            "negotiated_type": negotiated_type,
+            "negotiated_rate": rate,
+            "expiration_date": "2026-01-01",
+            "service_code": ["11"],
+            "billing_class": "professional",
+            "billing_code_modifier": ["26"],
+        }
+
+    def item(code, arrangement, rates, description="item"):
+        return {
+            "negotiation_arrangement": arrangement,
+            "name": description,
+            "billing_code_type": "CPT",
+            "billing_code_type_version": "2025",
+            "billing_code": code,
+            "description": description,
+            "negotiated_rates": rates,
+        }
+
+    def group(tin, npi):
+        return {"npi": [npi], "tin": {"type": "ein", "value": tin}}
+
+    return {
+        "reporting_entity_name": "edge payer",
+        "reporting_entity_type": "payer",
+        "provider_references": [
+            {"provider_group_id": 1, "provider_groups": [group("11-1", 1)]},
+            {"provider_group_id": 2, "provider_groups": [group("22-2", 2)]},
+            {"provider_group_id": 3, "provider_groups": [group("11-1", 3)]},
+        ],
+        "in_network": [
+            # a derived price next to a negotiated one, and one code priced
+            # for two TINs (refs 1 and 2) plus a second group of TIN 11-1
+            item("100", "ffs", [
+                {
+                    "provider_references": [1, 2],
+                    "negotiated_prices": [price(10.0), price(9.0, "derived")],
+                },
+                {
+                    "provider_references": [3],
+                    "negotiated_prices": [price(12.5)],
+                },
+                # a rate with no provider references unfolds to nothing
+                {"provider_references": [], "negotiated_prices": [price(1.0)]},
+            ]),
+            # not ffs, same code: never priced by the gold query
+            item("100", "capitation", [
+                {"provider_references": [1], "negotiated_prices": [price(7.0)]}
+            ], "capitation twin"),
+            # an item with no rates at all
+            item("200", "ffs", None),
+            item("300", "ffs", [
+                {"provider_references": [2], "negotiated_prices": [price(30.0)]}
+            ]),
+        ],
+        "version": "1.0.0",
+    }
+
+
+def test_gold_sql_matches_dataframe_chain(spark, cms_samples, tmp_path):
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
+        shoppable_price,
+    )
+
+    edge = str(tmp_path / "gold_edge_cases.json")
+    with open(edge, "w") as f:
+        json.dump(_gold_edge_cases_doc(), f, indent=1)
+    hits = 0
+    for path in [*cms_samples.values(), edge]:
+        t = build_silver(spark, path, chunktargetbytes=1024)
+        codes, pxp = t.codes.cache(), t.providers_x_payer.cache()
+        billing_codes = {r[0] for r in codes.select("billing_code").collect()}
+        tins = {r[0] for r in pxp.select("tin.value").collect()}
+        pairs = [(c, tin) for c in billing_codes for tin in tins]
+        pairs += [("no-such-code", next(iter(tins))),
+                  (next(iter(billing_codes)), "no-such-tin")]
+        for billing_code, tin in pairs:
+            chained = _chained_shoppable_price(codes, pxp, billing_code, tin)
+            want = _row_multiset(chained)
+            gold = shoppable_price(codes, pxp, billing_code, tin)
+            assert gold.schema == chained.schema
+            assert _row_multiset(gold) == want, (path, billing_code, tin)
+            if "no-such" in billing_code + tin:
+                assert not want, (path, billing_code, tin)
+            hits += bool(want)
+        # the lookups left the caller's cached frames cached
+        assert codes.storageLevel.useMemory and pxp.storageLevel.useMemory
+        codes.unpersist()
+        pxp.unpersist()
+    assert hits >= 4
+    # the edge file (the loop's last tables), its answers spelled out: code
+    # 100 at TIN 11-1 is the negotiated price of ref 1 and of ref 3; the
+    # derived price, the capitation twin and the unreferenced rate add
+    # nothing
+    got = sorted(
+        (r["negotiated_rate"], r["npi"][0])
+        for r in t.shoppable_price("100", "11-1").collect()
+    )
+    assert got == [(10.0, 1), (12.5, 3)]
+    rows = t.shoppable_price("100", "22-2").collect()
+    assert [r["negotiated_rate"] for r in rows] == [10.0]
+    assert t.shoppable_price("200", "11-1").count() == 0
+
+
+def test_gold_parameters_are_data_and_leave_no_views(spark, cms_samples):
+    from pyspark.errors import AnalysisException
+
+    from hls_payer_mrf_sparkstreaming_spark.plans.silver import (
+        shoppable_price,
+    )
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    t = build_silver(spark, cms_samples["ffs"], chunktargetbytes=1024)
+    assert t.shoppable_price("27448", "11-1111111").count() == 1
+    injected = "' OR '1'='1"
+    assert t.shoppable_price(injected, "11-1111111").count() == 0
+    assert t.shoppable_price("27448", injected).count() == 0
+    assert t.shoppable_price(injected, injected).count() == 0
+    # a codes frame without negotiated_rates fails analysis inside the
+    # statement; its temp views are dropped all the same
+    with pytest.raises(AnalysisException):
+        shoppable_price(
+            t.codes.drop("negotiated_rates"),
+            t.providers_x_payer,
+            "27448",
+            "11-1111111",
+        )
+    assert temp_views() == before
+
+
 def test_repeated_billing_code_keys_unique(spark, tmp_path):
     """Real CMS files repeat a billing code across in_network items; the
     surrogate key must stay per-row unique or prices cross-link (the old
